@@ -30,18 +30,14 @@ def _list_col_to_2d(col, width: int) -> np.ndarray:
     return np.asarray(vals[start:end], dtype=np.float64).reshape(len(col), width)
 
 
-def _batch_xy(batch, x_name: str, y_name: str | None, p: int, m: int):
+def _batch_xy(batch, x_name: str, y_name: str, p: int, m: int):
     """Extract (X, Y) NumPy arrays from one Arrow RecordBatch."""
     X = _list_col_to_2d(batch.column(batch.schema.get_field_index(x_name)), p)
     X = np.ascontiguousarray(X, dtype=np.float64)
-    Y = None
-    if y_name is not None:
-        ycol = batch.column(batch.schema.get_field_index(y_name))
-        if m > 1:
-            Y = _list_col_to_2d(ycol, m)
-        else:
-            Y = ycol.to_numpy(zero_copy_only=False).astype(np.float64)[:, np.newaxis]
-    return X, Y
+    ycol = batch.column(batch.schema.get_field_index(y_name))
+    if m > 1:
+        return X, _list_col_to_2d(ycol, m)
+    return X, ycol.to_numpy(zero_copy_only=False).astype(np.float64)[:, np.newaxis]
 
 
 def partial_aggregate(df, out_len: int, make_partial):
@@ -96,19 +92,6 @@ def gram_xty_pass(df, x_col: str, y_col: str, p: int, m: int = 1):
     yty = float(tot[-2])
     n = int(round(tot[-1]))
     return gram, (xty.ravel() if m == 1 else xty), yty, n
-
-
-def xtx_pass(df, x_col: str, p: int):
-    """Distributed ``X^T X`` only (used for the Lipschitz step bound of the
-    fixed-step FISTA variant — one extra pass at setup, then every solver
-    iteration saves its line-search probe pass)."""
-
-    def make_partial(batch):
-        X, _ = _batch_xy(batch, x_col, None, p, 1)
-        return (X.T @ X).ravel()
-
-    tot = partial_aggregate(df.select(x_col), p * p, make_partial)
-    return tot.reshape(p, p)
 
 
 def gram_xty_pass_keyed(df, x_col: str, y_col: str, key_col: str, p: int, n_keys: int):

@@ -65,6 +65,48 @@ def sparse_scales(
     }
 
 
+def _local_scales(
+    cols: np.ndarray, vals: np.ndarray, n_rows: int, n_cols: int,
+    scale: str = "l2",
+) -> np.ndarray:
+    """NumPy twin of :func:`sparse_scales` over fetched triplets (``cols``
+    already checked to lie in [0, n_cols)): the same per-column formulas
+    over the implicitly zero-padded columns, as a dense (n_cols,) vector.
+    A column without triplets, or with zero scale, gets 1.0."""
+    if scale == "l1":
+        s = np.bincount(cols, weights=np.abs(vals), minlength=n_cols)
+    elif scale in ("l2", "sd"):
+        ss = np.bincount(cols, weights=vals * vals, minlength=n_cols)
+        if scale == "l2":
+            s = np.sqrt(ss)
+        else:
+            s1 = np.bincount(cols, weights=vals, minlength=n_cols)
+            with np.errstate(invalid="ignore"):  # NaN as Spark's sqrt(<0)
+                s = np.sqrt((ss - s1 * s1 / n_rows) / (n_rows - 1))
+    elif scale == "max":
+        s = np.zeros(n_cols)
+        np.maximum.at(s, cols, vals)
+    else:
+        raise ValueError(scale)
+    s[s == 0.0] = 1.0
+    return s
+
+
+def _bulk_incore_bytes(n: int, m: int, nnz: int) -> int:
+    """Driver bytes the bulk in-core route of ``fit_sparse`` charges: y
+    (int64 row ids + the n x m responses) plus 36 B per triplet — 24 B
+    kept (row position, column, value) and 12 B of fetch transients (the
+    Arrow table and the argsort scratch)."""
+    return 8 * n * (1 + m) + 36 * nnz
+
+
+def _bad_col_error(col_id: int, n_cols: int) -> ValueError:
+    # explicit: a negative id would otherwise SILENTLY corrupt the scale
+    # vector through Python negative indexing, and an overflowing one dies
+    # with an opaque IndexError
+    return ValueError(f"triplet col_id {col_id} outside [0, n_cols={n_cols})")
+
+
 def long_to_features(
     triplets: DataFrame,
     n_cols: int,
@@ -557,13 +599,23 @@ def fit_sparse(
       carried over to the sparse entry).
     - past ``gram_limit`` (the wide-p regime), strong-rule screening +
       KKT repair (``src/screening.h``, ``src/kktCheck.h``) prune each
-      path point to a small active set, and the ACTIVE COLUMNS — never
-      the p-wide design — are fetched into a budget-guarded driver cache
-      (``incore_limit``; per-column nnz from the setup pass prices every
-      fetch in advance): each subset problem then solves in-core with
-      zero distributed jobs, so the per-path-point cluster cost collapses
-      to one fused KKT-gradient job plus an occasional column fetch
-      (~2-3 scans/point, see ``diagnostics["scans_per_path_point"]``).
+      path point to a small active set that solves driver-side. The
+      route is priced before any bulk transfer, by the one job that
+      counts the y rows and the triplets, against ``incore_limit`` (y
+      plus 36 B per triplet, ``_bulk_incore_bytes``):
+    - in budget (the bulk in-core route): y and the raw triplets are
+      fetched ONCE and the whole setup — scales, X'y, column sums,
+      squares and nnz, y moments — is NumPy; no scaled-triplet cache is
+      built and the path issues zero distributed jobs (every strong-rule
+      / KKT gradient is a driver-side bincount).
+    - over budget: a distributed setup (scale pass, a persisted scaled-
+      triplet cache, ONE setup aggregation) and, while y fits, the
+      ACTIVE COLUMNS — never the p-wide design — are fetched into a
+      budget-guarded driver cache (per-column nnz from the setup pass
+      prices every fetch in advance): each subset problem solves in-core,
+      so the per-path-point cluster cost collapses to one fused KKT-
+      gradient job plus an occasional column fetch (~2-3 scans/point,
+      see ``diagnostics["scans_per_path_point"]``).
     - when a subset breaches the in-core budgets, the distributed
       fallbacks take over: prox-Newton (3 O(nnz) jobs/outer iteration)
       under the Hessian-payload and pair-volume guards, else FISTA with a
@@ -594,24 +646,7 @@ def fit_sparse(
     else:
         ycols = [F.col(Y_COL).alias("_y0")]
     ydf = ydf2.select(F.col(row_col), *ycols).persist()
-    n = ydf.count()
-
     raw = triplets.select(row_col, col_col, val_col)
-    scales = sparse_scales(raw, n, scale=scale,
-                           row_col=row_col, col_col=col_col, val_col=val_col)
-    # per-column scale vector (index 1.. = feature columns; 0 = intercept)
-    s_vec = np.ones(n_cols + 1)
-    for k_, v_ in scales.items():
-        if not 0 <= int(k_) < n_cols:
-            # explicit: a negative id would otherwise SILENTLY corrupt the
-            # scale vector through Python negative indexing, and an
-            # overflowing one dies with an opaque IndexError
-            raise ValueError(
-                f"triplet col_id {int(k_)} outside [0, n_cols={n_cols})"
-            )
-        s_vec[1 + int(k_)] = float(v_)
-
-    icol = 1.0 / np.sqrt(n) if (intercept and scale == "l2") else 1.0
 
     xty = np.zeros((n_cols + 1, m))
     sums_x = np.zeros(n_cols + 1)
@@ -621,6 +656,7 @@ def fit_sparse(
     yty = 0.0
     gram = None
     nnz_sq = None
+    scans = 0  # distributed jobs issued outside the SparseLongDesign
 
     def _pair_volume():
         # self-join output size = sum over rows of nnz_row^2; measured
@@ -635,14 +671,114 @@ def fit_sparse(
     gram_route = family == "gaussian" and n_cols <= gram_limit and m == 1
     if gram_route:
         nnz_sq = _pair_volume()
+        scans += 1
         gram_route = nnz_sq is not None and float(nnz_sq) <= PAIR_VOLUME_LIMIT
 
-    if gram_route:
+    # ---- in-core state (the glmnet regime, kept honest at cluster scale):
+    # off the Gram route, y is collected once whenever it fits the in-core
+    # budget, and screened subset problems solve driver-side (see
+    # _fit_at). The route is PRICED before any transfer — the job that
+    # counts the y rows also counts the triplets. When y plus EVERY
+    # triplet fits (the bulk route) both are fetched once up front and the
+    # whole setup (scales, X'y, column sums / squares / nnz, y moments) is
+    # NumPy over the fetched arrays: no scale pass, no scaled-triplet
+    # cache, no setup aggregation, and the path loop issues zero
+    # distributed jobs (the strong-rule / KKT gradients are a bincount
+    # over the flat copy, see _full_gradient). Designs over the budget
+    # keep the distributed setup below and fetch active columns on demand.
+    from ..core.families import setup_family
+    from ..design import LocalDesign, SparseLocalDesign
+    from ..fit import DEFAULT_INCORE_LIMIT
+
+    fam_obj = setup_family(family)
+    limit = DEFAULT_INCORE_LIMIT if incore_limit is None else int(incore_limit)
+    if gram_route or limit <= 0:
+        n, nnz_all = ydf.count(), 0
+    else:
+        cnt = (
+            ydf.select(F.lit(1).alias("_yn"), F.lit(0).alias("_tn"))
+            .unionByName(raw.select(F.lit(0).alias("_yn"), F.lit(1).alias("_tn")))
+            .agg(F.sum("_yn"), F.sum("_tn"))
+            .first()
+        )
+        n, nnz_all = int(cnt[0] or 0), int(cnt[1] or 0)
+        scans += 1
+    icol = 1.0 / np.sqrt(n) if (intercept and scale == "l2") else 1.0
+
+    incore = None
+    incore_flat = None
+    bulk = False
+    if not gram_route and limit > 0 and n * max(m, 1) * 8 * 4 <= limit:
+        bulk = 0 < nnz_all and _bulk_incore_bytes(n, m, nnz_all) <= limit
+        ypdf = ydf.toPandas()  # Arrow transfer; budget-checked above
+        scans += 1
+        rid_raw = ypdf[row_col].to_numpy()
+        order = np.argsort(rid_raw, kind="stable")
+        rid_sorted = rid_raw[order]
+        Y_loc = np.empty((n, m))
+        for t in range(m):
+            Y_loc[:, t] = ypdf[f"_y{t}"].to_numpy(dtype=np.float64)[order]
+        del ypdf
+        incore = dict(
+            row_ids=rid_sorted, Y=Y_loc, cols={},
+            bytes=rid_sorted.nbytes + Y_loc.nbytes, limit=limit,
+        )
+
+    if bulk:
+        tpdf = raw.toPandas()  # Arrow transfer; priced above
+        scans += 1
+        cc = tpdf[col_col].to_numpy(dtype=np.int64)
+        rr = tpdf[row_col].to_numpy()
+        vv = tpdf[val_col].to_numpy(dtype=np.float64)
+        del tpdf
+        bad = (cc < 0) | (cc >= n_cols)
+        if bad.any():
+            raise _bad_col_error(int(cc[bad].min()), n_cols)
+        # scales over ALL triplets (sparse_scales' semantics); the setup
+        # statistics over the in-universe ones (the distributed setup
+        # aggregation joins on ydf)
+        s_vec = np.concatenate(([1.0], _local_scales(cc, vv, n, n_cols, scale)))
+        pos = np.minimum(np.searchsorted(rid_sorted, rr), n - 1)
+        ok = rid_sorted[pos] == rr
+        order = np.argsort(cc[ok], kind="stable")
+        cc, rpos = cc[ok][order], pos[ok][order].astype(np.intp)
+        vv = vv[ok][order] / s_vec[1 + cc]
+        del rr, pos, ok, order
+        for t in range(m):
+            xty[1:, t] = np.bincount(cc, weights=vv * Y_loc[rpos, t],
+                                     minlength=n_cols)
+        sums_x[1:] = np.bincount(cc, weights=vv, minlength=n_cols)
+        col_sq[1:] = np.bincount(cc, weights=vv * vv, minlength=n_cols)
+        col_nnz[1:] = np.bincount(cc, minlength=n_cols)
+        sums_y = Y_loc.sum(axis=0)
+        yty = float(Y_loc[:, 0] @ Y_loc[:, 0])
+        xty[0, :] = icol * sums_y
+        sums_x[0] = n * icol
+        col_sq[0] = n * icol * icol
+        # per-column cache entries are zero-copy views of the flat arrays
+        bounds = np.searchsorted(cc, np.arange(n_cols + 1))
+        for c in range(n_cols):
+            lo, hi = int(bounds[c]), int(bounds[c + 1])
+            incore["cols"][c] = (rpos[lo:hi], vv[lo:hi])
+        incore["bytes"] += rpos.nbytes + vv.nbytes + cc.nbytes
+        incore_flat = (rpos, cc, vv)
+    else:
+        scales = sparse_scales(raw, n, scale=scale, row_col=row_col,
+                               col_col=col_col, val_col=val_col)
+        bad = [k_ for k_ in scales if not 0 <= int(k_) < n_cols]
+        if bad:
+            raise _bad_col_error(int(min(bad)), n_cols)
+        # per-column scale vector (index 1.. = feature columns; 0 = intercept)
+        s_vec = np.ones(n_cols + 1)
+        for k_, v_ in scales.items():
+            s_vec[1 + int(k_)] = float(v_)
+
+    if gram_route or bulk:
         # The gaussian Gram route never scans the data again after setup,
-        # so the scaled-triplet cache is never built: the self-join runs
-        # on the RAW triplets and the standardization is applied to the
-        # collected statistics driver-side (G /= s_i s_j). That removes
-        # the broadcast-join + persist materialization pass entirely.
+        # and the bulk route never scans it after its fetch, so the
+        # scaled-triplet cache is never built: the Gram self-join runs on
+        # the RAW triplets and the standardization is applied to the
+        # collected statistics driver-side (G /= s_i s_j).
         trip = raw
     else:
         sdf = spark.createDataFrame(
@@ -656,10 +792,13 @@ def fit_sparse(
             .persist()
         )
 
-    design = SparseLongDesign(trip, ydf, family, n_cols, n, icol, m=m,
-                              row_col=row_col, col_col=col_col, val_col=val_col)
-    if nnz_sq is not None:
-        design.scans += 1
+    # the distributed design; the bulk route has none: with every column
+    # cached, each subset solve and gradient stays driver-side (see
+    # _fit_at and _full_gradient), so no distributed fallback can run
+    design = None if bulk else SparseLongDesign(
+        trip, ydf, family, n_cols, n, icol, m=m, row_col=row_col,
+        col_col=col_col, val_col=val_col,
+    )
 
     if gram_route:
         # FUSED moments + Gram: extend the triplets with two pseudo-columns
@@ -721,8 +860,8 @@ def fit_sparse(
         sums_x[0] = n * icol
         col_sq[0] = n * icol * icol
         gram = GramData(gram=G, xty=xty[:, 0].copy(), yty=yty, n=n)
-        design.scans += 1
-    else:
+        scans += 1
+    elif not bulk:
         # ONE setup pass: lambda_max cross-moments + column sums + per-
         # column sum of squares (trace Lipschitz bound) + per-column nnz
         # (the in-core fetch budget below) in one aggregation; the p-row
@@ -754,91 +893,17 @@ def fit_sparse(
         xty[0, :] = icol * sums_y
         sums_x[0] = n * icol
         col_sq[0] = n * icol * icol
-        design.scans += 2
+        scans += 2
     lambda_max = _lambda_max_from_stats(
         family, xty, sums_x, sums_y, n, intercept=True
     )
-
-    # ---- in-core subset-fit state (the glmnet regime, kept honest at
-    # cluster scale): screening prunes to active sets of tens of columns,
-    # so the ACTIVE columns — never the p-wide design — usually fit on the
-    # driver. Collect y once, fetch active columns incrementally (one
-    # filtered collect per NEW column batch, cached across path points),
-    # and solve each subset problem driver-side: zero distributed jobs per
-    # inner iteration, so scans per path point collapse to the screening /
-    # KKT gradients. Budget-guarded end to end (y payload, per-column
-    # fetch volume from the setup pass's nnz counts, the dense subset
-    # materialization, and the prox-Newton Hessian square); any breach
-    # falls back to the distributed subset solvers below.
-    from ..core.families import setup_family
-    from ..design import LocalDesign, SparseLocalDesign
-    from ..fit import DEFAULT_INCORE_LIMIT
-
-    fam_obj = setup_family(family)
-    incore = None
-    if gram is None:
-        limit = DEFAULT_INCORE_LIMIT if incore_limit is None else int(incore_limit)
-        if limit > 0 and n * max(m, 1) * 8 * 4 <= limit:
-            ypdf = ydf.toPandas()  # Arrow transfer; budget-checked above
-            design.scans += 1
-            rid_raw = ypdf[row_col].to_numpy()
-            order = np.argsort(rid_raw, kind="stable")
-            rid_sorted = rid_raw[order]
-            Y_loc = np.empty((n, m))
-            for t in range(m):
-                Y_loc[:, t] = ypdf[f"_y{t}"].to_numpy(dtype=np.float64)[order]
-            incore = dict(
-                row_ids=rid_sorted, Y=Y_loc, cols={},
-                bytes=rid_sorted.nbytes + Y_loc.nbytes, limit=limit,
-            )
-
-    # BULK in-core promotion (optimization round 13): when the WHOLE
-    # universe-restricted triplet set fits the same budget that prices the
-    # per-column fetches (the setup pass's nnz counts make the payload
-    # knowable in advance), fetch it ONCE — one Arrow collect — and keep a
-    # flat (row_pos, col, val) copy driver-side. Every later strong-rule /
-    # KKT full gradient then computes driver-side (O(nnz) NumPy, see
-    # _full_gradient) instead of issuing a join + groupBy job per path
-    # point, so the per-path-point cluster cost collapses from ~3 scans to
-    # ~0 while the distributed fallbacks (and every budget above) stay
-    # intact for designs past the limit. This is the glmnet in-core regime
-    # the architecture already targets for SUBSET solves, extended to the
-    # gradient: at cluster scale a design over the budget is untouched.
-    incore_flat = None
-    if incore is not None:
-        total_nnz = int(col_nnz[1:].sum())
-        # price: 24 B/nnz PERSISTED (the flat rpos/vv/cc arrays below —
-        # the per-column cache entries are zero-copy views of rpos/vv,
-        # so they add nothing) + 12 B/nnz headroom for the fetch's
-        # transients (the Arrow table and the argsort scratch); only the
-        # 24 B/nnz that survives is charged to incore["bytes"]
-        if 0 < total_nnz * 36 <= incore["limit"] - incore["bytes"]:
-            bulk = (
-                trip.join(ydf.select(row_col), row_col, "leftsemi")
-                .select(col_col, row_col, val_col)
-                .toPandas()  # Arrow transfer; priced above
-            )
-            design.scans += 1
-            cc = bulk[col_col].to_numpy(dtype=np.int64)
-            rr = bulk[row_col].to_numpy()
-            vv = bulk[val_col].to_numpy(dtype=np.float64)
-            order = np.argsort(cc, kind="stable")
-            cc, rr, vv = cc[order], rr[order], vv[order]
-            # row universe membership is guaranteed by the leftsemi join,
-            # so the searchsorted positions are exact
-            rpos = np.searchsorted(incore["row_ids"], rr).astype(np.intp)
-            bounds = np.searchsorted(cc, np.arange(n_cols + 1))
-            for c in range(n_cols):
-                lo, hi = int(bounds[c]), int(bounds[c + 1])
-                incore["cols"][c] = (rpos[lo:hi], vv[lo:hi])
-            incore["bytes"] += rpos.nbytes + vv.nbytes + cc.nbytes
-            incore_flat = (rpos, cc, vv)
 
     def _incore_fetch(cols_needed) -> bool:
         """Ensure the given feature columns (0-based) are cached driver-
         side; fetches the missing ones as ONE broadcast-pruned collect.
         Returns False (fetching nothing) when the fetch would break the
         budget."""
+        nonlocal scans
         missing = [c for c in cols_needed if c not in incore["cols"]]
         if not missing:
             return True
@@ -860,7 +925,7 @@ def fit_sparse(
             .select(col_col, row_col, val_col)
             .toPandas()  # Arrow transfer, then one vectorized groupby
         )
-        design.scans += 1
+        scans += 1
         rid = incore["row_ids"]
         grouped = dict(iter(pdf.groupby(col_col))) if len(pdf) else {}
         for c in missing:
@@ -935,10 +1000,11 @@ def fit_sparse(
         join + groupBy(col) — no lp shuffle join, roughly 3x cheaper than
         the generic SparseLongDesign.full_gradient job at wide p.
 
-        With the bulk in-core promotion (incore_flat) the whole gradient
+        On the bulk in-core route (incore_flat) the whole gradient
         is driver-side NumPy — lp from the cached columns, pseudo-gradient,
         then ONE bincount scatter over the flat (row_pos, col, val) copy —
         and the path loop issues ZERO distributed jobs per path point."""
+        nonlocal scans
         if incore_flat is not None:
             B = np.asarray(beta, dtype=np.float64).reshape(n_cols + 1, m)
             nz = np.flatnonzero(np.any(B[1:] != 0, axis=1))
@@ -1003,7 +1069,7 @@ def fit_sparse(
                 gi = 1 + gpdf[col_col].to_numpy(dtype=np.int64)
                 for t in range(m):
                     grad[gi, t] = gpdf[f"_gc{t}"].to_numpy(dtype=np.float64)
-                design.scans += 1
+                scans += 1
                 return grad
         return design.full_gradient(beta)
 
@@ -1036,10 +1102,11 @@ def fit_sparse(
     _pv = {"nnz_sq": nnz_sq, "ok": True if gram is not None else None}
 
     def _pair_volume_ok():
+        nonlocal scans
         if _pv["ok"] is None:
             if _pv["nnz_sq"] is None:
                 _pv["nnz_sq"] = _pair_volume()
-                design.scans += 1
+                scans += 1
             _pv["ok"] = (
                 _pv["nnz_sq"] is not None
                 and float(_pv["nnz_sq"]) <= PAIR_VOLUME_LIMIT
@@ -1321,7 +1388,7 @@ def fit_sparse(
                     lam[:n_active_pen] * sig[k], active_set,
                 )
                 for sub in sub_holder:
-                    design.scans += sub.scans
+                    scans += sub.scans
                 beta = np.zeros((p_total, m))
                 beta[active_set] = res.beta.reshape(len(active_set), m)
 
@@ -1381,10 +1448,12 @@ def fit_sparse(
 
     trip.unpersist()
     ydf.unpersist()
+    if design is not None:
+        scans += design.scans
     betas = betas[:k]
     sig = sig[:k]
     betas[:, 0, :] *= icol
-    x_scale = np.array([scales.get(j, 1.0) for j in range(n_cols)])
+    x_scale = s_vec[1:].copy()
     out = _rescale(
         betas, np.zeros(n_cols), x_scale, rinfo.y_center, rinfo.y_scale, True
     )
@@ -1413,8 +1482,8 @@ def fit_sparse(
         # Gram path amortizes to <1 scan per path point)
         diagnostics=dict(
             primals=[], duals=[], time=[],
-            sparse_scans=design.scans,
-            scans_per_path_point=design.scans / max(k, 1),
+            sparse_scans=scans,
+            scans_per_path_point=scans / max(k, 1),
             hessian_pair_volume=(
                 None if _pv["nnz_sq"] is None else float(_pv["nnz_sq"])
             ),

@@ -162,7 +162,8 @@ def _overlap_tier_jobs(jobs: list) -> dict:
     sum(tiers), at identical cluster cost and identical per-tier plans).
     ``jobs`` is ``[(tier, thunk)]``; returns ``{tier: result}`` in the
     given tier order. Every thunk runs to completion; the first failure
-    IN TIER ORDER is re-raised (fail-loud is preserved — the only
+    IN TIER ORDER is re-raised, with each later failure attached to it
+    as a note (fail-loud is preserved — the only
     semantic delta vs the sequential loop is that tiers after a failing
     one may already have run, which for the extend writes means a
     partial ``out_dir``, exactly what a mid-directory sequential crash
@@ -173,15 +174,17 @@ def _overlap_tier_jobs(jobs: list) -> dict:
     with ThreadPoolExecutor(max_workers=min(len(jobs), 3)) as pool:
         futs = [(t, pool.submit(fn)) for t, fn in jobs]
         out: dict = {}
-        first_err = None
+        errs = []
         for t, fut in futs:
             try:
                 out[t] = fut.result()
             except Exception as e:
-                if first_err is None:
-                    first_err = e
-        if first_err is not None:
-            raise first_err
+                errs.append((t, e))
+        if errs:
+            first = errs[0][1]
+            for t, e in errs[1:]:
+                first.add_note(f"tier {t!r} also failed: {type(e).__name__}: {e}")
+            raise first
         return out
 
 

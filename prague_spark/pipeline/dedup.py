@@ -806,11 +806,28 @@ def _minhash_index_rows(
     )
     # stored counts of the buckets the shard touches only: the semi
     # join prunes the index map-side (broadcast for any sane delta),
-    # so the distinct shuffles O(touched) rows, not O(index)
+    # so the aggregation shuffles O(touched) rows, not O(index). One
+    # row per (band, key): a bucket whose stored rows disagree on
+    # bucket_n (a hand-unioned index) fails the job instead of
+    # duplicating the shard's index rows once per distinct count
     touched_old = (
         index.select("band", "key", "bucket_n")
         .join(delta.select("band", "key"), ["band", "key"], "left_semi")
-        .distinct()
+        .groupBy("band", "key")
+        .agg(F.min("bucket_n").alias("_lo"), F.max("bucket_n").alias("_hi"))
+        .select(
+            "band", "key",
+            F.coalesce(
+                F.assert_true(
+                    F.col("_lo") == F.col("_hi"),
+                    "extend_minhash_index: stored bucket_n differs within "
+                    "one (band, key) bucket; the index counts are "
+                    "inconsistent (a hand-unioned index?), rebuild it "
+                    "with write_minhash_index",
+                ),
+                F.col("_hi"),
+            ).alias("bucket_n"),
+        )
     )
     new_n = _hold(
         delta.join(touched_old, ["band", "key"], "left").select(
@@ -1219,6 +1236,15 @@ def embedding_cosine_pairs(
 
     from .similarity import _norm_safe
 
+    # before either LSH branch: the Arrow signature pass packs plane i as
+    # np.int64(1) << i, which overflows past 63 planes
+    if n_planes is not None and not 1 <= n_planes <= 63:
+        raise ValueError(
+            f"embedding_cosine_pairs: n_planes={n_planes} must be in "
+            "1..63 — the bucket id packs one sign bit per plane into a "
+            "signed 64-bit long, whose 63 value bits fit planes 1..63 "
+            "(use n_bands of smaller signatures for more planes)"
+        )
     _evict_generation(_gen_cache("cosine_pairs"))
     # norm floored at 1e-12: an all-zero embedding must rank as
     # cosine ~0, not raise DIVIDE_BY_ZERO under ANSI mode (greatest is

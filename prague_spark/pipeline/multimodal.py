@@ -1,7 +1,7 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads.
 
-Images/audio/video are carried as ``binary`` columns with a metadata
-struct; decode / feature-extraction run as Arrow-batched functions over
+Images/audio/video are carried as ``binary`` columns; decode /
+feature-extraction run as Arrow-batched functions over
 ``mapInPandas`` so each task processes whole record batches. The actual
 media decoding is STUBBED (the image/audio libraries are not in this
 runtime) behind ``decoder=`` hooks with a deterministic fake for tests —
@@ -19,43 +19,7 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image | audio | video
-        T.StructField("format", T.StringType()),  # png, wav, mp4, ...
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
-
-def attach_media_metadata(
-    df: DataFrame,
-    payload_col: str,
-    media_type: str,
-    fmt: str,
-    out: str = "media_meta",
-) -> DataFrame:
-    """Wrap a binary payload with a typed metadata struct (sizes unknown
-    until decode are left null)."""
-    return df.withColumn(
-        out,
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(fmt).alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("n_channels"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(None).cast("long").alias("duration_ms"),
-        ),
-    )
-
+from pyspark.sql import DataFrame, functions as F
 
 _PIL_AVAILABLE: bool | None = None  # resolved lazily, once per process
 
@@ -70,18 +34,6 @@ def pillow_image_decoder(payload: bytes) -> np.ndarray:
 
     with Image.open(io.BytesIO(payload)) as im:
         return np.atleast_3d(np.asarray(im.convert("RGB"), dtype=np.float64))
-
-
-def soundfile_audio_decoder(payload: bytes) -> np.ndarray:
-    """Real audio decode via soundfile (lazily imported). Returns a mono
-    float64 waveform (multi-channel payloads are averaged)."""
-    import io
-
-    import soundfile as sf
-
-    data, _sr = sf.read(io.BytesIO(payload), dtype="float64")
-    data = np.asarray(data, dtype=np.float64)
-    return data if data.ndim == 1 else data.mean(axis=1)
 
 
 def default_image_decoder(payload: bytes) -> np.ndarray:

@@ -182,11 +182,6 @@ def fingerprint(df: DataFrame, text_col: str, out: str = "fingerprint") -> DataF
     return df.withColumn(out, F.md5(F.concat_ws(" ", toks)))
 
 
-def content_hash(df: DataFrame, text_col: str, out: str = "content_md5") -> DataFrame:
-    """Exact-content key (md5 of the raw text)."""
-    return df.withColumn(out, F.md5(F.col(text_col)))
-
-
 def _winnow_stage(df: DataFrame, text_col: str, k: int, w: int) -> DataFrame:
     """Shared winnowing pipeline: adds ``_wset`` (sorted distinct window
     minima) to ``df``. Each stage is materialized as a real column before

@@ -68,6 +68,67 @@ def test_prox_preserves_order_and_sign():
     assert np.all(np.diff(np.abs(x)[np.argsort(-np.abs(v))]) <= 1e-12)
 
 
+def _prox_by_stack_pass(v, lam):
+    # reference: the one-element-at-a-time stack PAVA over every element
+    from prague_spark.core import prox
+
+    ax = np.abs(v)
+    order = np.argsort(-ax, kind="stable")
+    sums, counts = prox._pava_stack(ax[order] - lam, np.ones(v.size))
+    out = np.empty(v.size)
+    out[order] = np.maximum(np.repeat(sums / counts, counts.astype(int)), 0.0)
+    return out * np.sign(v)
+
+
+def _assert_prox_matches_stack_pass(v, lam):
+    got, ref = sorted_l1_prox(v, lam), _prox_by_stack_pass(v, lam)
+    assert np.max(np.abs(got - ref)) <= 1e-12 * max(1.0, np.max(np.abs(v)))
+
+
+def test_prox_vectorized_matches_stack_pass():
+    r = np.random.default_rng(2026)
+    for i in range(400):
+        p = int(r.integers(1, 200))
+        v = r.normal(size=p) * r.uniform(0.1, 20.0)
+        lam = np.sort(r.uniform(0.0, 5.0, size=p))[::-1]
+        if i % 4 == 0:
+            v = np.round(v)  # ties, including exact zeros
+        elif i % 4 == 1:
+            v[r.random(p) < 0.3] = 0.0
+        elif i % 4 == 2:
+            lam = lam[(np.arange(p) // 4) * 4]  # runs of equal lambda
+        else:
+            lam = np.full(p, lam[0])
+        _assert_prox_matches_stack_pass(v, lam)
+    for v in (3.0, -0.5, 0.0):  # p = 1
+        _assert_prox_matches_stack_pass(np.array([v]), np.array([1.0]))
+
+
+def test_prox_round_cap_falls_back_to_stack_pass(monkeypatch):
+    from prague_spark.core import prox
+
+    # a staircase: |v| falls by one per rank under a flat lambda whose
+    # last entry drops by 1e6, so each vectorized round pools only one
+    # more element into the tail block and the rounds hit the cap
+    p = 200
+    v = 2e6 + np.arange(p, 0, -1.0)
+    lam = np.full(p, 1e6)
+    lam[-1] = 0.0
+    calls = []
+    stack = prox._pava_stack
+
+    def recording(sums, counts):
+        calls.append(sums.size)
+        return stack(sums, counts)
+
+    monkeypatch.setattr(prox, "_pava_stack", recording)
+    x = sorted_l1_prox(v, lam)
+    assert calls == [p - prox._MAX_ROUNDS]
+    ref = _prox_by_stack_pass(v, lam)
+    assert np.max(np.abs(x - ref)) <= 1e-12 * np.max(np.abs(v))
+    assert len(np.unique(x)) == 1  # the whole staircase pools
+
+
 # ---------- stats ----------
 
 def test_norm_ppf():

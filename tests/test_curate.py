@@ -658,3 +658,24 @@ def test_batch_gate_cluster_fold_spares_gate_pin(docs, spark, tmp_path):
         "the minhash gate's pinned band frame was already freed by the "
         "cluster fold's internal checkpoint windows"
     )
+
+
+def test_overlap_tier_jobs_reports_every_failure():
+    # the first failure in tier order is raised; the later ones ride on
+    # it as notes instead of vanishing
+    from prague_spark.pipeline.curate import _overlap_tier_jobs
+
+    def boom(msg, exc=ValueError):
+        def thunk():
+            raise exc(msg)
+        return thunk
+
+    with pytest.raises(ValueError, match="exact broke") as info:
+        _overlap_tier_jobs([
+            ("exact", boom("exact broke")),
+            ("minhash", lambda: 3),
+            ("spans", boom("spans broke", RuntimeError)),
+        ])
+    assert info.value.__notes__ == [
+        "tier 'spans' also failed: RuntimeError: spans broke"
+    ]

@@ -750,6 +750,18 @@ def test_embedding_cosine_pairs_lsh_subset_of_exact(emb):
     assert len(lsh) > 0  # 8 planes at threshold 0.3 keeps useful recall
 
 
+def test_embedding_cosine_pairs_plane_count_guard(emb):
+    # the banded Arrow route packs plane i as np.int64(1) << i, which
+    # overflows past 63 planes; both LSH routes must refuse up front
+    vec = emb.withColumn("vec", F.transform("embedding", lambda x: x.cast("double")))
+    for bad in (0, 64):
+        for bands in (1, 2):
+            with pytest.raises(ValueError, match="1..63"):
+                dedup.embedding_cosine_pairs(
+                    vec, "vec_id", "vec", 0.3, n_planes=bad, n_bands=bands
+                )
+
+
 def test_embedding_cell_pairs_semdedup(emb, spark):
     """SemDeDup cluster-blocked near-dup pairs: a strict subset of the
     exact all-pairs output (pairs split across cells are the recall
@@ -2903,6 +2915,31 @@ def test_extend_indexes_match_one_shot_union(docs, spark, tmp_path):
     with pytest.raises(ValueError, match="does not match the"):
         dedup.extend_span_index(shard, s0, str(tmp_path / "sy"),
                                 "doc_id", "text", k=7)
+
+
+def test_minhash_incremental_rejects_inconsistent_bucket_counts(
+    docs, spark, tmp_path
+):
+    """The incremental roll-forward trusts the stored bucket_n. A
+    hand-unioned index whose buckets carry two different counts must
+    fail the job, not duplicate the shard's rows once per count."""
+    old = docs.filter(F.col("doc_id") % 2 == 0)
+    shard = docs.filter(F.col("doc_id") % 2 == 1)
+    m0 = str(tmp_path / "m0")
+    dedup.write_minhash_index(old, m0, "doc_id", "text", **_MHI_KW)
+    idx = spark.read.parquet(m0)
+    ok = dedup._minhash_index_rows(idx, shard, "doc_id", "text",
+                                   incremental=True, **_MHI_KW)
+    # consistent counts: one row per (doc, band), as before
+    assert ok.groupBy("doc", "band").count().filter("count > 1").count() == 0
+    # a second per-build copy under fresh doc ids, with its own count
+    stale = idx.withColumn("doc", F.col("doc") + 10**9).withColumn(
+        "bucket_n", F.col("bucket_n") + 1
+    )
+    rows = dedup._minhash_index_rows(idx.unionByName(stale), shard, "doc_id",
+                                     "text", incremental=True, **_MHI_KW)
+    with pytest.raises(Exception, match="stored bucket_n differs"):
+        rows.collect()
 
 
 def test_cross_generator_eviction_keeps_shared_pins(docs, spark):
