@@ -486,3 +486,41 @@ def admm_gaussian(
 def admm_rho(gram_max_eig: float, lam_max_sigma: float) -> float:
     """rho heuristic: eigmax^(1/3) * (max penalty)^(2/3) (``src/owl.cpp:188-190``)."""
     return float(gram_max_eig ** (1.0 / 3.0) * lam_max_sigma ** (2.0 / 3.0))
+
+
+def gaussian_step(
+    gram: GramData,
+    beta0: np.ndarray,
+    z: np.ndarray,
+    u: np.ndarray,
+    lam: np.ndarray,
+    *,
+    max_passes: int = 10**6,
+    tol_abs: float = 1e-5,
+    tol_rel: float = 1e-4,
+    diagnostics: bool = False,
+):
+    """One gaussian path point: ADMM on the Gram statistics with the
+    reference's rho heuristic, warm-started from the previous point's
+    ``(z, u)``. Returns ``(FitResult, z, u)``."""
+    w, _ = gram.eigh()
+    rho = admm_rho(float(w.max()), float(lam.max()) if lam.size else 1.0)
+    return admm_gaussian(
+        gram, np.ravel(beta0), z, u, lam, rho, max_passes=max_passes,
+        tol_abs=tol_abs, tol_rel=tol_rel, diagnostics=diagnostics,
+    )
+
+
+# FISTA's fixed step is factor / (a bound on eigmax(X'X)): the families'
+# Hessian weights are at most 1 (gaussian), 1/4 (binomial) and 1/2
+# (multinomial). Poisson has no global bound and keeps the backtracking
+# line search.
+STEP_FACTOR = {"gaussian": 1.0, "binomial": 4.0, "multinomial": 2.0}
+
+
+def lipschitz_step(family: str, eig_bound: float) -> float | None:
+    """Fixed FISTA step for ``family`` from an upper bound on eigmax(X'X),
+    or None (backtracking) when the family has no global bound or the
+    bound is not positive."""
+    factor = STEP_FACTOR.get(family)
+    return factor / eig_bound if factor is not None and eig_bound > 0 else None

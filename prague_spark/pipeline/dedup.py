@@ -1538,8 +1538,11 @@ def embedding_cell_pairs(
     ``similarity.write_ivf_index`` instead and join over the stored
     layout). The over-full cell list (at most ``len(centroids)`` rows)
     is collected driver-side from ONE count aggregation and pushed back
-    as an ``isin`` filter. Not thread-safe across concurrent callers in
-    one SparkContext (the one-generation cache is module-global)."""
+    as an ``isin`` filter. The one-generation cache is per calling
+    thread (``_GEN_LOCAL`` is thread-local), so concurrent callers on
+    different threads keep their own generations; two calls from ONE
+    thread evict each other, so materialize the first (or pass
+    ``persist=False``) before the second."""
     import logging
 
     from .similarity import _norm_safe, assign_ivf_cells

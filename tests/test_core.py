@@ -386,3 +386,66 @@ def test_random_problem_rho_and_groups(spark):
     df0, _ = random_problem(spark, n=4000, p=4, q=0.5, seed=3)
     r0 = df0.select(F.corr("x1", "x3").alias("c")).first()["c"]
     assert abs(r0) < 0.06
+
+
+# ---------- path driver ----------
+
+
+def _gaussian_path_problem(seed=5, n=200, p=30):
+    from prague_spark.core.solver import gaussian_step
+
+    r = np.random.default_rng(seed)
+    Xf = r.standard_normal((n, p))
+    Xf = (Xf - Xf.mean(axis=0)) / np.linalg.norm(Xf - Xf.mean(axis=0), axis=0)
+    X = np.hstack([np.full((n, 1), 1.0 / np.sqrt(n)), Xf])
+    y = Xf[:, :4] @ np.array([3.0, -2.0, 2.0, 1.0]) + 0.3 * r.standard_normal(n)
+    design = LocalDesign(X, y, setup_family("gaussian"))
+
+    def solve(idx, beta_init, lam_scaled, z, u):
+        return gaussian_step(design.subset(idx).gram(), beta_init, z, u,
+                             lam_scaled, tol_abs=1e-11, tol_rel=1e-11)
+
+    kw = dict(n=n, p_total=p + 1, m=1, intercept=True,
+              null_deviance=float(y @ y), full_gradient=design.full_gradient,
+              n_sigma=8, lambda_min_ratio=0.05)
+    return lambda_sequence(p, n, "bh", 0.2), np.abs(X.T @ y)[1:], solve, kw
+
+
+def test_path_driver_screening_matches_full_solves():
+    # strong rule + KKT repair change which columns each point solves,
+    # not the solution
+    from prague_spark.core.path import run_path
+
+    lam, lmax, solve, kw = _gaussian_path_problem()
+    full = run_path(lam, lmax, solve, screening=False, **kw)
+    for keep in (True, False):
+        scr = run_path(lam, lmax, solve, screening=True,
+                       stop_screening_when_full=keep, **kw)
+        assert len(scr.sigma) == len(full.sigma) == 8
+        np.testing.assert_allclose(scr.betas, full.betas, atol=1e-7)
+        assert any(len(a) < kw["p_total"] for a in scr.active_sets)
+        assert len(scr.diagnostics["violations"]) == 8
+    assert not full.abandoned
+    assert all(len(a) == kw["p_total"] for a in full.active_sets)
+
+
+def test_path_driver_caps_and_zero_null_deviance():
+    from prague_spark.core.path import run_path
+
+    lam, lmax, solve, kw = _gaussian_path_problem()
+    full = run_path(lam, lmax, solve, screening=False, **kw)
+    # the cap excludes the first point past it
+    cap = int(full.n_unique[3])
+    capped = run_path(lam, lmax, solve, screening=False, max_variables=cap,
+                      **kw)
+    assert np.all(capped.n_unique <= cap)
+    assert len(capped.sigma) < len(full.sigma)
+    # the abandon limit cuts the path, without the current point, once
+    # the repair set holds more penalized columns than the limit
+    cut = run_path(lam, lmax, solve, screening=True, abandon_limit=0, **kw)
+    assert cut.abandoned
+    assert len(cut.sigma) == 1  # sigma_max: the intercept alone
+    # a zero null deviance gives ratio 0, not a division error
+    kw0 = dict(kw, null_deviance=0.0)
+    zero = run_path(lam, lmax, solve, screening=False, **kw0)
+    assert np.all(zero.deviance_ratios == 0.0)

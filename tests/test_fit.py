@@ -332,20 +332,6 @@ def test_coef_interpolation_and_exact_refit(li):
         m.coef(sigma=mid, exact=True)
 
 
-def test_binomial_spark_fista_matches_incore(li):
-    # the per-iteration FISTA escape hatch: fixed-Lipschitz step from the
-    # standardized X'X now DERIVED from the raw setup scan
-    df = li.limit(500).withColumn(
-        "high", F.when(F.col("l_discount") > 0.05, "hi").otherwise("lo")
-    ).cache()
-    kw = dict(n_sigma=3, lambda_min_ratio=0.5, max_passes=2000, screening=False)
-    m_local = ps.fit(df, FEATURES, "high", "binomial", solver="incore", **kw)
-    m_fista = ps.fit(df, FEATURES, "high", "binomial", solver="spark_fista", **kw)
-    np.testing.assert_allclose(
-        m_local.betas, m_fista.betas, rtol=1e-3, atol=1e-4
-    )
-
-
 @pytest.mark.slow  # full wide-p fit, minute-class
 def test_wide_p_hessian_guard_falls_back_to_fista(spark, monkeypatch):
     # Wide designs must NOT ship the (p_act*m)^2 prox-Newton Hessian
@@ -601,3 +587,11 @@ def test_readme_glm_quickstart(spark, lineitem):
     ) <= {"ret", "ok"}
     auc = ps.score(lif, mb, "flag", "auc")
     assert 0.0 <= auc <= 1.0
+
+
+def test_fit_rejects_unknown_solver():
+    # checked before any data is read
+    with pytest.raises(ValueError, match=r"auto \| gram \| incore \| spark"):
+        ps.fit(None, ["x"], "y", "gaussian", solver="spark_fista")
+    with pytest.raises(ValueError, match="gaussian family only"):
+        ps.fit(None, ["x"], "y", "binomial", solver="gram")

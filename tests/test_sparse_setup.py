@@ -89,3 +89,34 @@ def test_out_of_range_col_id_raises_on_both_routes(spark, design):
                        incore_limit=limit)
         msgs.append(str(exc.value))
     assert msgs[0] == msgs[1] == f"triplet col_id {P} outside [0, n_cols={P})"
+
+
+def test_fit_sparse_has_no_intercept_switch():
+    # fit_sparse always fits an intercept; an intercept=False request
+    # fails at the call instead of being ignored
+    with pytest.raises(TypeError, match="intercept"):
+        fit_sparse(None, None, "y", "gaussian", n_cols=P, intercept=False)
+
+
+def test_sparse_gram_pair_expansion_matches_dense_gram():
+    # SparseLocalDesign.gram() from the cached pair expansion equals the
+    # dense GramData.from_xy product to float rounding (NumPy only)
+    from prague_spark.core.families import setup_family
+    from prague_spark.design import LocalDesign, SparseLocalDesign
+
+    rng = np.random.default_rng(29)
+    n, p = 300, 40
+    X = np.where(rng.random((n, p)) < 0.1, rng.normal(size=(n, p)), 0.0)
+    icol = 1.0 / np.sqrt(n)
+    Xf = np.hstack([np.full((n, 1), icol), X])
+    y = X[:, 0] * 2.0 + rng.normal(scale=0.5, size=n)
+    fam = setup_family("gaussian")
+    rows, cols = np.nonzero(X)
+    sld = SparseLocalDesign(rows, cols + 1, X[rows, cols], n, p + 1, y,
+                            fam, icol=icol)
+    gd_s = sld.gram()
+    gd_d = LocalDesign(Xf, y, fam).gram()
+    np.testing.assert_allclose(gd_s.gram, gd_d.gram, atol=1e-10)
+    np.testing.assert_allclose(gd_s.xty, gd_d.xty, atol=1e-10)
+    assert abs(gd_s.yty - gd_d.yty) < 1e-8
+    assert gd_s.n == gd_d.n
