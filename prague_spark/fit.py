@@ -38,7 +38,9 @@ from .design import GramData, GramGaussianDesign, LocalDesign, SparkGlmDesign
 from .design.linalg import glm_setup_pass, gram_xty_pass
 from .model import SlopeModel
 from .ops.features import assemble_features
-from .ops.response import Y_COL, preprocess_response, preprocess_response_local
+from .ops.response import (
+    Y_COL, preprocess_response, preprocess_response_local, raw_label,
+)
 from .ops.standardize import StandardizerModel, fit_standardizer
 
 X_COL = "_x_features"
@@ -83,12 +85,12 @@ def _collect_raw_xy(df, features, label: str, family: str):
     """Collect the RAW (pre-standardization) feature columns plus the raw
     label to the driver via one Arrow transfer. Plain double columns (no
     array assembly projection) — the cheapest possible scan. The label
-    comes back as strings for the classification families so class
-    discovery + encoding can run driver-side too."""
-    as_str = family in ("binomial", "multinomial")
+    comes back as the Arrow column of ``raw_label`` (strings for the
+    classification families), so class discovery + encoding can run
+    driver-side too."""
     tbl = df.select(
         *[F.col(c).cast("double").alias(c) for c in features],
-        F.col(label).cast("string" if as_str else "double").alias("_lbl"),
+        raw_label(label, family).alias("_lbl"),
     ).toArrow()
     X = np.column_stack(
         [
@@ -96,9 +98,7 @@ def _collect_raw_xy(df, features, label: str, family: str):
             for c in features
         ]
     )
-    y_col = tbl.column("_lbl")
-    y_vals = y_col if as_str else y_col.to_numpy(zero_copy_only=False)
-    return np.ascontiguousarray(X), y_vals
+    return np.ascontiguousarray(X), tbl.column("_lbl")
 
 
 def _local_raw_setup(X: np.ndarray, Y: np.ndarray, fam) -> dict:
@@ -154,6 +154,83 @@ def _lambda_max_from_stats(family, xty, sums_x, sums_y, n, intercept):
     return np.abs(lm.ravel(order="F"))
 
 
+def _refit_closure(df, features, label, family, kw):
+    """refit for coef(exact=True) (R/coef.R:35-48): rerun ``fit`` at
+    explicitly requested sigmas, every other keyword argument in ``kw``
+    unchanged."""
+    def _refit(sig):
+        return fit(df, features, label, family, sigma=sig, **kw)
+
+    return _refit
+
+
+def _gram_fast_path(family: str, n_features: int, kw: dict) -> bool:
+    """Whether ``fit`` with keyword arguments ``kw`` (omitted ones at
+    their defaults) takes the gaussian one-pass route, whose model is a
+    function of the raw moments alone (``_gram_model``)."""
+    return (
+        family == "gaussian"
+        and kw.get("solver", "auto") in ("auto", "gram")
+        and n_features + 1 <= GRAM_P_LIMIT
+        and kw.get("intercept", True)
+        and kw.get("center", True)
+        and kw.get("scale", "l2") in ("l2", "sd", "none")
+        and kw.get("user_lambda") is None
+        and not kw.get("diagnostics", False)
+    )
+
+
+# fit's keyword arguments the one-pass gaussian path reads
+_GRAM_PATH_KEYS = (
+    "center", "scale", "lambda_type", "q", "n_sigma", "sigma",
+    "lambda_min_ratio", "max_passes", "tol_abs", "tol_rel",
+    "tol_dev_change", "tol_dev_ratio", "max_variables",
+)
+
+
+def _gram_model(raw: dict, df, features, label, kw: dict) -> SlopeModel:
+    """The gaussian one-pass model from raw moments ``raw`` (the keys of
+    ``core.gram_path.standardize_stats``), with ``fit``'s keyword
+    arguments ``kw`` (omitted ones at their defaults). ``fit`` passes the
+    moments of its one setup scan; ``ops.cv.cv_fit`` the sum of its
+    per-fold moments, so its base model costs no scan of its own."""
+    from .core.gram_path import fit_gaussian_path_from_stats
+
+    if not np.isfinite(raw["gram"]).all() or not np.isfinite(raw["yty"]):
+        raise ValueError("NA/inf values in features or response")
+    res = fit_gaussian_path_from_stats(
+        raw, **{k: kw[k] for k in _GRAM_PATH_KEYS if k in kw}
+    )
+    betas3 = res["betas"][:, :, np.newaxis]
+    nz = [np.flatnonzero(np.any(b != 0, axis=1)) for b in betas3]
+    return SlopeModel(
+        refit=_refit_closure(
+            df, features, label, "gaussian",
+            {k: v for k, v in kw.items() if k != "sigma"},
+        ),
+        family="gaussian",
+        feature_names=list(features),
+        intercept=True,
+        betas=betas3,
+        sigma=res["sigma"],
+        lam=res["lam"] / raw["n"],
+        null_deviance=float(res["null_dev"]),
+        deviances=res["deviances"],
+        deviance_ratios=res["dev_ratios"],
+        passes=res["passes"],
+        active_sets=nz,
+        # cluster counts from the standardized-space path (ties live
+        # in the penalized internal space, not in original units)
+        n_unique=res["n_unique"],
+        class_names=[],
+        n_targets=1,
+        x_center=res["x_center"],
+        x_scale=res["x_scale"],
+        y_center=np.atleast_1d(res["y_center"]),
+        y_scale=np.atleast_1d(res["y_scale"]),
+    )
+
+
 def fit(
     df: DataFrame,
     features: list[str],
@@ -193,8 +270,7 @@ def fit(
             "use solver='auto', 'incore' or 'spark'"
         )
 
-    # refit closure for coef(exact=True) (R/coef.R:35-48): rerun this fit
-    # at explicitly requested sigmas, everything else unchanged
+    # every keyword argument but sigma: what the refit closure reruns with
     _refit_kwargs = dict(
         intercept=intercept, center=center, scale=scale,
         lambda_type=lambda_type, q=q, n_sigma=n_sigma,
@@ -205,16 +281,15 @@ def fit(
         tol_dev_change=tol_dev_change, tol_dev_ratio=tol_dev_ratio,
         max_variables=max_variables, diagnostics=diagnostics,
     )
-
-    def _refit(sig):
-        return fit(df, features, label, family, sigma=sig, **_refit_kwargs)
+    _refit = _refit_closure(df, features, label, family, _refit_kwargs)
 
     # ---- gaussian one-pass fast path ----
     # Everything a gaussian path fit needs (response centering/scaling,
     # feature standardization, lambda_max, the whole ADMM path, and the
     # deviances) is a function of raw moments, so the entire fit is ONE
     # fused scan + driver arithmetic (core.gram_path — same machinery as
-    # the one-pass CV). The staged path below (4 scans) remains for
+    # the one-pass CV, which builds its base model from its fold pass
+    # through the same ``_gram_model``). The staged path below remains for
     # diagnostics, in-core/spark solvers, and non-derivable scales.
     # an explicitly requested Gram solver past the p guard would silently
     # degrade to a different solver — refuse instead
@@ -224,18 +299,7 @@ def fit(
             f"GRAM_P_LIMIT={GRAM_P_LIMIT}. Use solver='auto'/'spark' (the "
             "distributed iterative path) for wide designs."
         )
-    if (
-        family == "gaussian"
-        and solver in ("auto", "gram")
-        and len(features) + 1 <= GRAM_P_LIMIT
-        and intercept
-        and center
-        and scale in ("l2", "sd", "none")
-        and user_lambda is None
-        and not diagnostics
-    ):
-        from .core.gram_path import fit_gaussian_path_from_stats
-
+    if _gram_fast_path(family, len(features), _refit_kwargs):
         xdf = df.select(
             F.array(*[F.col(c).cast("double") for c in features]).alias("_x"),
             F.col(label).cast("double").alias("_y"),
@@ -249,40 +313,8 @@ def fit(
             sum_y=float(setup["sums_y"][0]),
             n=setup["n"],
         )
-        if not np.isfinite(raw["gram"]).all() or not np.isfinite(raw["yty"]):
-            raise ValueError("NA/inf values in features or response")
-        res = fit_gaussian_path_from_stats(
-            raw, center=center, scale=scale, lambda_type=lambda_type, q=q,
-            n_sigma=n_sigma, sigma=sigma, lambda_min_ratio=lambda_min_ratio,
-            max_passes=max_passes, tol_abs=tol_abs, tol_rel=tol_rel,
-            tol_dev_change=tol_dev_change, tol_dev_ratio=tol_dev_ratio,
-            max_variables=max_variables,
-        )
-        betas3 = res["betas"][:, :, np.newaxis]
-        nz = [np.flatnonzero(np.any(b != 0, axis=1)) for b in betas3]
-        return SlopeModel(
-            refit=_refit,
-            family=family,
-            feature_names=list(features),
-            intercept=True,
-            betas=betas3,
-            sigma=res["sigma"],
-            lam=res["lam"] / raw["n"],
-            null_deviance=float(res["null_dev"]),
-            deviances=res["deviances"],
-            deviance_ratios=res["dev_ratios"],
-            passes=res["passes"],
-            active_sets=nz,
-            # cluster counts from the standardized-space path (ties live
-            # in the penalized internal space, not in original units)
-            n_unique=res["n_unique"],
-            class_names=[],
-            n_targets=1,
-            x_center=res["x_center"],
-            x_scale=res["x_scale"],
-            y_center=np.atleast_1d(res["y_center"]),
-            y_scale=np.atleast_1d(res["y_scale"]),
-        )
+        return _gram_model(raw, df, features, label,
+                           dict(_refit_kwargs, sigma=sigma))
 
     # ---- response + features + standardization ----
     # For moment-derivable scales, ONE fused raw scan supplies the
@@ -329,7 +361,7 @@ def fit(
             fits_incore = n_cheap <= cap
         if fits_incore:
             X_raw, y_vals = _collect_raw_xy(df, features, label, family)
-            rinfo, Y_raw = preprocess_response_local(y_vals, family)
+            rinfo, Y_raw = preprocess_response_local(y_vals, family, label)
             if n_cheap is None:
                 n_cheap = int(X_raw.shape[0])
             if (

@@ -8,10 +8,20 @@ path on the test split for every requested measure; the aggregation
 (mean / se / t-based 95% CI per sigma x q x measure, then per-measure
 argmin optimum) is a plain groupBy + window — SQL-verifiable.
 
-Scale note: the outer grid is embarrassingly parallel driver orchestration
-(each cell is its own chain of Spark jobs); fold filters are predicate
-pushdown on the cached DataFrame. Test-fold scoring collects only the test
-fold when it is driver-sized, scoring the entire path vectorized at once.
+Scan cost: the gaussian mse route reads the data ONCE per repeat, the
+initial full-data fit included. One keyed pass yields every fold's raw
+sufficient statistics; their sum is the full-data statistics ``fit``'s
+one-pass gaussian route would scan for, so the base model is built from
+it (``fit._gram_model``) with no scan of its own, and each fold's refit
+and test mse are driver arithmetic. Only when ``fit`` would not take its
+one-pass route (``diagnostics=True``, p past ``GRAM_P_LIMIT``) does the
+base model cost a separate ``fit``.
+
+Scale note: the other routes' outer grid is embarrassingly parallel
+driver orchestration (each cell is its own chain of Spark jobs); fold
+filters are predicate pushdown on the cached DataFrame. Test-fold scoring
+collects only the test fold when it is driver-sized, scoring the entire
+path vectorized at once.
 """
 
 from __future__ import annotations
@@ -101,10 +111,6 @@ def cv_fit(
             UserWarning, stacklevel=2,
         )
 
-    # initial full fit freezes the sigma grid (R/trainOwl.R:69, 84)
-    base = fit(df, features, label, family, q=q_values[0], **fit_kwargs)
-    sigma = base.sigma
-
     # one-pass gaussian fast path: per-fold raw sufficient statistics from
     # a single keyed scan per repeat; per-fold standardization, the whole
     # path refit, and the test mse are then pure driver arithmetic
@@ -120,17 +126,21 @@ def cv_fit(
         and "user_lambda" not in fit_kwargs
         and "sigma" not in fit_kwargs
     ):
-        cells = _gaussian_gram_cells(
-            df, features, label, sigma, q_values, n_folds, n_repeats,
+        cells, base = _gaussian_gram_cells(
+            df, features, label, q_values, n_folds, n_repeats,
             seed, fold_col, fit_kwargs,
         )
-        return _aggregate(cells, sigma, q_values, measures, n_folds,
+        return _aggregate(cells, base.sigma, q_values, measures, n_folds,
                           n_repeats, base, optimum=optimum)
     if method == "gram":
         raise ValueError(
             "method='gram' needs family='gaussian', measures=['mse'], "
             "intercept/center on, scale in ('l2','sd')"
         )
+
+    # initial full fit freezes the sigma grid (R/trainOwl.R:69, 84)
+    base = fit(df, features, label, family, q=q_values[0], **fit_kwargs)
+    sigma = base.sigma
 
     # the outer grid is embarrassingly parallel: each (rep, fold) cell is
     # its own chain of Spark jobs, submitted concurrently from a driver
@@ -239,17 +249,22 @@ def _aggregate(cells, sigma, q_values, measures, n_folds, n_repeats, base,
 
 
 def _gaussian_gram_cells(
-    df, features, label, sigma, q_values, n_folds, n_repeats, seed,
+    df, features, label, q_values, n_folds, n_repeats, seed,
     fold_col, fit_kwargs,
-) -> list[dict]:
+) -> tuple[list[dict], SlopeModel]:
     """One distributed pass per repeat; every fold's refit + mse is driver
-    arithmetic on sufficient statistics."""
+    arithmetic on sufficient statistics. The base model that freezes the
+    sigma grid is ``fit``'s one-pass gaussian model over repeat 0's
+    summed fold statistics (no scan of its own) whenever ``fit`` itself
+    would take that route; otherwise it is a separate ``fit``."""
     from ..core.gram_path import (
         fit_gaussian_path_from_stats, mse_from_stats, subtract_stats,
     )
     from ..design.linalg import gram_xty_pass_keyed
+    from ..fit import _gram_fast_path, _gram_model
 
     p = len(features)
+    base_kw = dict(fit_kwargs, q=q_values[0])
     scale = fit_kwargs.get("scale", "l2")
     path_kw = dict(
         center=True,
@@ -263,6 +278,7 @@ def _gaussian_gram_cells(
     )
 
     cells: list[dict] = []
+    base = None
     for rep in range(n_repeats):
         if fold_col is None:
             key = F.floor(F.rand(seed + rep) * n_folds).cast("int")
@@ -281,11 +297,18 @@ def _gaussian_gram_cells(
             total = {
                 k: (total[k] + f[k]) for k in total
             }
+        if base is None:
+            # initial full fit freezes the sigma grid (R/trainOwl.R:69, 84)
+            base = (
+                _gram_model(total, df, features, label, base_kw)
+                if _gram_fast_path("gaussian", p, base_kw)
+                else fit(df, features, label, "gaussian", **base_kw)
+            )
         for fold in range(n_folds):
             train = subtract_stats(total, per_fold[fold])
             for qv in q_values:
                 res = fit_gaussian_path_from_stats(
-                    train, q=qv, sigma=sigma, **path_kw
+                    train, q=qv, sigma=base.sigma, **path_kw
                 )
                 betas = res["betas"]
                 for si in range(len(res["sigma"])):
@@ -294,4 +317,4 @@ def _gaussian_gram_cells(
                              measure="mse",
                              value=mse_from_stats(per_fold[fold], betas[si]))
                     )
-    return cells
+    return cells, base

@@ -33,6 +33,21 @@ class ResponseInfo:
     class_names: list[str] = field(default_factory=list)
 
 
+def _check_no_null_labels(n_null, label: str) -> None:
+    """Fail loudly on null responses: the aggregates would skip those rows
+    while the encoded column kept them (NaN or a silently defaulted
+    class). Every route reports the same message."""
+    if n_null:
+        raise ValueError(
+            f"response column {label!r} has {int(n_null)} null value(s)"
+        )
+
+
+def _n_null_double(label: str):
+    # a value that does not cast to double is as missing as a null
+    return F.sum(F.col(label).cast("double").isNull().cast("long")).alias("_nnull")
+
+
 def preprocess_response(
     df: DataFrame, label: str, family: str
 ) -> tuple[DataFrame, ResponseInfo]:
@@ -40,7 +55,9 @@ def preprocess_response(
         row = df.agg(
             F.avg(F.col(label).cast("double")).alias("m"),
             F.stddev_samp(F.col(label).cast("double")).alias("s"),
+            _n_null_double(label),
         ).first()
+        _check_no_null_labels(row["_nnull"], label)
         y_center = float(row["m"])
         # Internal unit-variance scaling (the glmnet convention). The
         # reference keeps y_scale = 1 but its rescale step supports any
@@ -60,12 +77,13 @@ def preprocess_response(
             .count()
             .collect()
         )
-        classes = sorted(r["cls"] for r in counts)
+        by = {r["cls"]: r["count"] for r in counts}
+        _check_no_null_labels(by.get(None), label)
+        classes = sorted(by)
         if len(classes) > 2:
             raise ValueError("more than two classes in response")
         if len(classes) < 2:
             raise ValueError("only one class in response.")
-        by = {r["cls"]: r["count"] for r in counts}
         min_class = min(by.values())
         if min_class <= 1:
             raise ValueError(f"one class only has {min_class} observations.")
@@ -81,7 +99,9 @@ def preprocess_response(
         counts = (
             df.groupBy(F.col(label).cast("string").alias("cls")).count().collect()
         )
-        classes = sorted(r["cls"] for r in counts)
+        by = {r["cls"]: r["count"] for r in counts}
+        _check_no_null_labels(by.get(None), label)
+        classes = sorted(by)
         n_classes = len(classes)
         if n_classes == 2:
             raise ValueError(
@@ -89,7 +109,6 @@ def preprocess_response(
             )
         if n_classes < 2:
             raise ValueError("only one class in response")
-        by = {r["cls"]: r["count"] for r in counts}
         if min(by.values()) <= 1:
             raise ValueError(f"one class only has {min(by.values())} observations.")
         n_targets = n_classes - 1
@@ -114,7 +133,9 @@ def preprocess_response(
         )
 
     if family == "poisson":
-        ymin = df.agg(F.min(F.col(label).cast("double"))).first()[0]
+        row = df.agg(F.min(F.col(label).cast("double")), _n_null_double(label)).first()
+        _check_no_null_labels(row["_nnull"], label)
+        ymin = row[0]
         if ymin is not None and ymin < 0:
             raise ValueError("cannot have negative responses in poisson model")
         out = df.withColumn(Y_COL, F.col(label).cast("double"))
@@ -149,11 +170,23 @@ def _factorize_labels(y):
     return [seen[i] for i in order], ranked, counts_sorted
 
 
-def preprocess_response_local(y, family: str) -> tuple[ResponseInfo, np.ndarray]:
-    """NumPy twin of :func:`preprocess_response` for the in-core fast path:
-    identical validation and encoding over an already-collected label array
-    (strings for the classification families, doubles otherwise). Returns
+def raw_label(label: str, family: str):
+    """The label column as :func:`preprocess_response_local` reads it:
+    strings for the classification families, doubles otherwise (the casts
+    :func:`preprocess_response` applies)."""
+    as_str = family in ("binomial", "multinomial")
+    return F.col(label).cast("string" if as_str else "double")
+
+
+def preprocess_response_local(
+    y, family: str, label: str
+) -> tuple[ResponseInfo, np.ndarray]:
+    """NumPy twin of :func:`preprocess_response` for the driver-side
+    routes: identical validation and encoding over an already-collected
+    label array — the Arrow column of :func:`raw_label` (whose nulls fail
+    as on the Spark route), or any array of the same values. Returns
     ``(info, Y)`` with Y shaped (n, n_targets) float64."""
+    _check_no_null_labels(getattr(y, "null_count", 0), label)
     if family == "gaussian":
         yv = np.asarray(y, dtype=np.float64)
         y_center = float(yv.mean())

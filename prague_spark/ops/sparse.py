@@ -30,6 +30,18 @@ _EXP_MAX = 709.78  # trunc_exp clamp, mirrors core.families
 # consumer — it pays the volume EVERY iteration).
 PAIR_VOLUME_LIMIT = 2e8
 
+# the sparse in-core Hessian's price, in BLAS multiply-adds per scattered
+# pair: ``fit_sparse`` solves a subset on ``SparseLocalDesign`` when
+# SCATTER_PAIR_COST * sum_r nnz_r^2 <= n * p_act^2, the dense (X*w)'X
+# product's multiply-adds. At perfbench glm's sparse shape (n=5000, 16
+# nonzeros per row) on a 437-column binomial support, the sparse Hessian
+# took 0.002 s and the dense one 0.15 s (4 vCPU), agreeing to 7e-15.
+SCATTER_PAIR_COST = 40
+# driver bytes charged per pair of that expansion: its three cached
+# arrays (flat cell index, product, row; 24 B) plus the weighted product
+# each scatter builds (8 B)
+PAIR_BYTES = 32
+
 
 def sparse_scales(
     triplets: DataFrame,
@@ -602,11 +614,18 @@ def fit_sparse(
       route is priced before any bulk transfer, by the one job that
       counts the y rows and the triplets, against ``incore_limit`` (y
       plus 36 B per triplet, ``_bulk_incore_bytes``):
-    - in budget (the bulk in-core route): y and the raw triplets are
-      fetched ONCE and the whole setup — scales, X'y, column sums,
-      squares and nnz, y moments — is NumPy; no scaled-triplet cache is
-      built and the path issues zero distributed jobs (every strong-rule
-      / KKT gradient is a driver-side bincount).
+    - in budget (the bulk in-core route): the raw label and the raw
+      triplets are each fetched ONCE through Arrow; the response is
+      encoded driver-side (``preprocess_response_local``, as ``fit``'s
+      in-core route does) and the whole setup — scales, X'y, column
+      sums, squares and nnz, y moments — is NumPy. The fit runs 4 Spark
+      jobs in all (the pricing count, 2 under AQE, and the two fetches):
+      no response job, no y or scaled-triplet cache, and zero
+      distributed jobs along the path (every strong-rule / KKT gradient
+      is a driver-side bincount). A multinomial is priced at one target
+      until its classes are known; when its one-hot y then breaks the
+      budget, the fetched arrays are dropped and the fit takes the
+      route below.
     - over budget: a distributed setup (scale pass, a persisted scaled-
       triplet cache, ONE setup aggregation) and, while y fits, the
       ACTIVE COLUMNS — never the p-wide design — are fetched into a
@@ -626,35 +645,29 @@ def fit_sparse(
 
     ``triplets``: (row_col, col_col, val_col) with col ids in [0, n_cols);
     ``y_df``: (row_col, label) with one row per observation (the row
-    universe — all-zero rows included).
+    universe — all-zero rows included). A null label raises
+    ``ValueError`` on every route.
     """
+    from ..core.families import setup_family
     from ..core.lambdas import lambda_sequence
     from ..core.path import run_path
     from ..core.solver import (
         STEP_FACTOR, GramData, fista, gaussian_step, lipschitz_step,
         prox_newton,
     )
-    from ..fit import HESS_CELL_GUARD, _lambda_max_from_stats, _rescale
+    from ..design import LocalDesign, SparseLocalDesign
+    from ..fit import (
+        DEFAULT_INCORE_LIMIT, HESS_CELL_GUARD, _lambda_max_from_stats, _rescale,
+    )
     from ..model import SlopeModel
-    from .response import Y_COL, preprocess_response
+    from .response import (
+        Y_COL, preprocess_response, preprocess_response_local, raw_label,
+    )
 
     spark = triplets.sparkSession
-    ydf2, rinfo = preprocess_response(y_df, label, family)
-    m = rinfo.n_targets
-    if m > 1:
-        ycols = [F.col(Y_COL)[t].alias(f"_y{t}") for t in range(m)]
-    else:
-        ycols = [F.col(Y_COL).alias("_y0")]
-    ydf = ydf2.select(F.col(row_col), *ycols).persist()
     raw = triplets.select(row_col, col_col, val_col)
-
-    xty = np.zeros((n_cols + 1, m))
-    sums_x = np.zeros(n_cols + 1)
-    col_sq = np.zeros(n_cols + 1)
-    col_nnz = np.zeros(n_cols + 1, dtype=np.int64)
-    sums_y = np.zeros(m)
-    yty = 0.0
-    gram = None
+    fam_obj = setup_family(family)
+    limit = DEFAULT_INCORE_LIMIT if incore_limit is None else int(incore_limit)
     nnz_sq = None
     scans = 0  # distributed jobs issued outside the SparseLongDesign
 
@@ -668,7 +681,7 @@ def fit_sparse(
             .first()[0]
         )
 
-    gram_route = family == "gaussian" and n_cols <= gram_limit and m == 1
+    gram_route = family == "gaussian" and n_cols <= gram_limit
     if gram_route:
         nnz_sq = _pair_volume()
         scans += 1
@@ -677,39 +690,78 @@ def fit_sparse(
     # ---- in-core state (the glmnet regime, kept honest at cluster scale):
     # off the Gram route, y is collected once whenever it fits the in-core
     # budget, and screened subset problems solve driver-side (see
-    # solve). The route is PRICED before any transfer — the job that
-    # counts the y rows also counts the triplets. When y plus EVERY
-    # triplet fits (the bulk route) both are fetched once up front and the
-    # whole setup (scales, X'y, column sums / squares / nnz, y moments) is
-    # NumPy over the fetched arrays: no scale pass, no scaled-triplet
-    # cache, no setup aggregation, and the path loop issues zero
-    # distributed jobs (the strong-rule / KKT gradients are a bincount
-    # over the flat copy, see _full_gradient). Designs over the budget
-    # keep the distributed setup below and fetch active columns on demand.
-    from ..core.families import setup_family
-    from ..design import LocalDesign, SparseLocalDesign
-    from ..fit import DEFAULT_INCORE_LIMIT
+    # solve). The route is PRICED before any transfer — one job counts the
+    # raw y rows and the triplets. When y plus EVERY triplet fits (the
+    # bulk route), the raw label is fetched once through Arrow and encoded
+    # driver-side (preprocess_response_local, as fit's in-core route
+    # does), then the triplets are fetched, and the whole setup (scales,
+    # X'y, column sums / squares / nnz, y moments) is NumPy over the
+    # fetched arrays: no response job, no y cache, no scale pass, no
+    # scaled-triplet cache, no setup aggregation — four jobs in all — and
+    # the path loop issues zero distributed jobs (the strong-rule / KKT
+    # gradients are a bincount over the flat copy, see _full_gradient).
+    # Designs over the budget keep the distributed setup below and fetch
+    # active columns on demand.
+    rinfo = ydf = Y_loc = None
+    n = nnz_all = None
 
-    fam_obj = setup_family(family)
-    limit = DEFAULT_INCORE_LIMIT if incore_limit is None else int(incore_limit)
-    if gram_route or limit <= 0:
-        n, nnz_all = ydf.count(), 0
-    else:
+    def _bulk_fits(m_):
+        # y's in-core state (4 copies of the n x m responses) and the
+        # bulk price both fit the budget
+        return (0 < nnz_all and n * m_ * 8 * 4 <= limit
+                and _bulk_incore_bytes(n, m_, nnz_all) <= limit)
+
+    if not gram_route and limit > 0:
         cnt = (
-            ydf.select(F.lit(1).alias("_yn"), F.lit(0).alias("_tn"))
+            y_df.select(F.lit(1).alias("_yn"), F.lit(0).alias("_tn"))
             .unionByName(raw.select(F.lit(0).alias("_yn"), F.lit(1).alias("_tn")))
             .agg(F.sum("_yn"), F.sum("_tn"))
             .first()
         )
         n, nnz_all = int(cnt[0] or 0), int(cnt[1] or 0)
         scans += 1
+        # priced at one target: a multinomial's m is known only after
+        # encoding, and its one-hot payload is re-priced then
+        if _bulk_fits(1):
+            ytbl = y_df.select(
+                F.col(row_col), raw_label(label, family).alias("_lbl")
+            ).toArrow()
+            scans += 1
+            rinfo, Y_all = preprocess_response_local(
+                ytbl.column("_lbl"), family, label
+            )
+            if _bulk_fits(rinfo.n_targets):
+                rid_raw = ytbl.column(row_col).to_numpy()
+                order = np.argsort(rid_raw, kind="stable")
+                rid_sorted, Y_loc = rid_raw[order], Y_all[order]
+            else:
+                # the one-hot payload breaks the budget after all: release
+                # the arrays and take the distributed response flow
+                rinfo = None
+            del ytbl, Y_all
+    bulk = Y_loc is not None
+    if rinfo is None:
+        ydf2, rinfo = preprocess_response(y_df, label, family)
+    m = rinfo.n_targets
+    if not bulk:
+        if m > 1:
+            ycols = [F.col(Y_COL)[t].alias(f"_y{t}") for t in range(m)]
+        else:
+            ycols = [F.col(Y_COL).alias("_y0")]
+        ydf = ydf2.select(F.col(row_col), *ycols).persist()
+    if n is None:
+        n, nnz_all = ydf.count(), 0
     icol = 1.0 / np.sqrt(n) if scale == "l2" else 1.0
 
-    incore = None
-    incore_flat = None
-    bulk = False
-    if not gram_route and limit > 0 and n * max(m, 1) * 8 * 4 <= limit:
-        bulk = 0 < nnz_all and _bulk_incore_bytes(n, m, nnz_all) <= limit
+    xty = np.zeros((n_cols + 1, m))
+    sums_x = np.zeros(n_cols + 1)
+    col_sq = np.zeros(n_cols + 1)
+    col_nnz = np.zeros(n_cols + 1, dtype=np.int64)
+    sums_y = np.zeros(m)
+    yty = 0.0
+    gram = None
+
+    if not bulk and not gram_route and limit > 0 and n * m * 8 * 4 <= limit:
         ypdf = ydf.toPandas()  # Arrow transfer; budget-checked above
         scans += 1
         rid_raw = ypdf[row_col].to_numpy()
@@ -719,10 +771,11 @@ def fit_sparse(
         for t in range(m):
             Y_loc[:, t] = ypdf[f"_y{t}"].to_numpy(dtype=np.float64)[order]
         del ypdf
-        incore = dict(
-            row_ids=rid_sorted, Y=Y_loc, cols={},
-            bytes=rid_sorted.nbytes + Y_loc.nbytes, limit=limit,
-        )
+    incore = None if Y_loc is None else dict(
+        row_ids=rid_sorted, Y=Y_loc, cols={},
+        bytes=rid_sorted.nbytes + Y_loc.nbytes, limit=limit,
+    )
+    incore_flat = None
 
     if bulk:
         tpdf = raw.toPandas()  # Arrow transfer; priced above
@@ -943,13 +996,16 @@ def fit_sparse(
             incore["bytes"] += entry[0].nbytes + entry[1].nbytes
         return True
 
+    def _square_bytes(p_act):
+        # the in-core Hessian (or Gram) square of a p_act-column subset
+        return (p_act * m) ** 2 * 8
+
     def _incore_design(idx):
         """LocalDesign over the active columns, or None when any budget
         would be breached."""
         need = [int(j) - 1 for j in idx if j >= 1]
         dense_bytes = n * len(idx) * 8
-        hess_bytes = (len(idx) * m) ** 2 * 8
-        if incore["bytes"] + dense_bytes + hess_bytes > incore["limit"]:
+        if incore["bytes"] + dense_bytes + _square_bytes(len(idx)) > incore["limit"]:
             return None
         if not _incore_fetch(need):
             return None
@@ -1113,28 +1169,30 @@ def fit_sparse(
             # prefer the SPARSE in-core design when its pair expansion
             # (sum_r nnz_r^2 scatter, see SparseLocalDesign.eval_hessian
             # and .gram) is clearly cheaper than the dense (X*w)^T X
-            # product — at the wide-p bench shapes the dense IRLS Hessian
-            # was ~35% of the whole fit wall while the active columns are
-            # >99% zeros. The 40x factor prices np.add.at scatter against
-            # BLAS MACs; denser subsets keep the dense route below. The
-            # admission charges the Hessian (or Gram) square AND the cached
-            # pair expansion itself (~32 B/pair — four parallel arrays)
-            # against the in-core budget: at shapes where n*p_act is large
-            # but nnz is small the expansion is the dominant allocation.
-            # Gaussian needs only the Gram sufficient statistics, so it
-            # skips the (n x p_act) dense materialization and its
-            # O(n p_act^2) product; len(idx) <= n keeps from_xy's Woodbury
-            # regime out of scope (a wider-than-n subset would have picked
-            # the kernel factorization, which the pair expansion does not
+            # product it replaces, whose n * p_act^2 multiply-adds
+            # dominate each dense prox-Newton outer iteration: at the
+            # wide-p bench shapes the dense IRLS Hessian was ~35% of the
+            # whole fit wall while the active columns are >99% zeros.
+            # SCATTER_PAIR_COST prices one scattered pair in BLAS
+            # multiply-adds; denser subsets keep the dense route below.
+            # The admission charges the Hessian (or Gram) square AND the
+            # pair expansion itself (PAIR_BYTES per pair) against the
+            # in-core budget: at shapes where n*p_act is large but nnz is
+            # small the expansion is the dominant allocation. Gaussian
+            # needs only the Gram sufficient statistics, so it skips the
+            # (n x p_act) dense materialization and its O(n p_act^2)
+            # product; len(idx) <= n keeps from_xy's Woodbury regime out
+            # of scope (a wider-than-n subset would have picked the
+            # kernel factorization, which the pair expansion does not
             # build).
             sld = _incore_sparse_design(idx)
-            square = (len(idx) * m) ** 2 * 8
             if (
                 sld is not None
                 and (family != "gaussian" or len(idx) <= n)
-                and incore["bytes"] + square
-                + 32 * sld.hess_pair_volume() <= incore["limit"]
-                and sld.hess_pair_volume() * 40 <= n * len(idx)
+                and incore["bytes"] + _square_bytes(len(idx))
+                + PAIR_BYTES * sld.hess_pair_volume() <= incore["limit"]
+                and SCATTER_PAIR_COST * sld.hess_pair_volume()
+                <= n * len(idx) ** 2
             ):
                 route_counts["incore_sparse"] += 1
                 if family == "gaussian":
@@ -1227,7 +1285,8 @@ def fit_sparse(
     )
 
     trip.unpersist()
-    ydf.unpersist()
+    if ydf is not None:
+        ydf.unpersist()
     if design is not None:
         scans += design.scans
     betas = path.betas

@@ -39,3 +39,27 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def lineitem(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+
+
+_JOB_GROUPS = iter(range(1, 1 << 30))
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), n_jobs)``: runs ``fn`` under a fresh
+    Spark job group and counts that group's jobs in the status store."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs_{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
