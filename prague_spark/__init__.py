@@ -27,6 +27,7 @@ from .ops.sparse import (
     cv_fit_sparse, fit_sparse, predict_sparse, score_path_sparse, score_sparse,
 )
 from .plan_audit import assert_scale_shape, audit
+from .scope import scope
 from .session import get_spark
 
 __all__ = [
@@ -58,6 +59,7 @@ __all__ = [
     "audit",
     "assert_scale_shape",
     "get_spark",
+    "scope",
 ]
 
 __version__ = "0.1.0"

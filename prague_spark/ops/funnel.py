@@ -32,7 +32,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..scope import generation, pin
 
+
+@generation
 def funnel(
     events: DataFrame,
     key_col: str,
@@ -54,7 +57,8 @@ def funnel(
     step-set pre-filter) are dropped from the output entirely — a
     truncated fold would be a silently wrong depth, dropping is honest —
     and the drop count is logged at WARNING. Costs one extra
-    map-side-combinable count aggregation; None (default) disables."""
+    map-side-combinable count aggregation; None (default) disables.
+    Its two pins belong to the caller's :func:`~prague_spark.scope.scope`."""
     if not steps:
         raise ValueError("steps must be non-empty")
     base = events.select(
@@ -73,13 +77,12 @@ def funnel(
     if max_events_per_key is not None:
         import logging
 
-        base = base.persist()
+        base = pin(base)
         # count("e") counts non-null = step events only
-        hot = (
+        hot = pin(
             base.groupBy("key")
             .agg(F.count("e").alias("_n"))
             .filter(F.col("_n") > max_events_per_key)
-            .persist()
         )
         n_hot = hot.count()
         if n_hot:

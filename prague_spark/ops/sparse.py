@@ -1148,9 +1148,10 @@ def fit_sparse(
     p_total = n_cols + 1
 
     # which route each subset solve took (observability for the plan
-    # audit: dense in-core ADMM/prox-Newton, sparse in-core matvec FISTA,
-    # or a distributed fallback)
-    route_counts = {"incore_dense": 0, "incore_sparse": 0, "distributed": 0}
+    # audit: dense in-core ADMM/prox-Newton, sparse in-core ADMM/
+    # prox-Newton, sparse in-core matvec FISTA, or a distributed fallback)
+    route_counts = {"incore_dense": 0, "incore_sparse": 0,
+                    "incore_sparse_fista": 0, "distributed": 0}
     admm_kw = dict(max_passes=max_passes, tol_abs=tol_abs, tol_rel=tol_rel)
     newton_kw = dict(n_unpenalized=1, max_passes=max_passes,
                      tol_rel_gap=tol_rel_gap, tol_infeas=tol_infeas,
@@ -1220,7 +1221,7 @@ def fit_sparse(
                 # instead of fixing the step — probes are in-core O(nnz)
                 # matvecs (no scans), and the majorization check halves
                 # any over-large step. Poisson has no global bound.
-                route_counts["incore_sparse"] += 1
+                route_counts["incore_sparse_fista"] += 1
                 lr_in = (
                     lipschitz_step(family, 1.1 * sld.power_eigmax())
                     if family in STEP_FACTOR else None

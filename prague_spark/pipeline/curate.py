@@ -38,12 +38,14 @@ engine has no curation layer; this module packages the pipeline a
 
 from __future__ import annotations
 
+import contextvars
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..scope import generation, scope
 from . import dedup, text
 
 #: artifact subdirectory (inside the artifact dir) per tier
@@ -168,11 +170,13 @@ def _overlap_tier_jobs(jobs: list) -> dict:
     one may already have run, which for the extend writes means a
     partial ``out_dir``, exactly what a mid-directory sequential crash
     leaves too). 2-3 jobs in flight is enough to fill scheduling gaps;
-    more would just contend."""
+    more would just contend. Each thunk runs in a copy of the caller's
+    context, so what it pins lands in the caller's scope."""
     if len(jobs) <= 1:
         return {t: fn() for t, fn in jobs}
     with ThreadPoolExecutor(max_workers=min(len(jobs), 3)) as pool:
-        futs = [(t, pool.submit(fn)) for t, fn in jobs]
+        futs = [(t, pool.submit(contextvars.copy_context().run, fn))
+                for t, fn in jobs]
         out: dict = {}
         errs = []
         for t, fut in futs:
@@ -276,11 +280,14 @@ def build_curation_artifacts(
             num_hashes=mh["num_hashes"], shingle_n=mh["shingle_n"],
             seed=mh["seed"],
         )
-        pairs = dedup.minhash_lsh_candidates(
-            sig, id_col, bands=mh["bands"],
-            rows_per_band=mh["rows_per_band"], max_bucket=cfg.max_bucket,
-        )
-        dedup.write_assignment(dedup.connected_components(pairs), p)
+        # the only tier that pins or checkpoints: free it all after the
+        # write, its one consumer
+        with scope():
+            pairs = dedup.minhash_lsh_candidates(
+                sig, id_col, bands=mh["bands"],
+                rows_per_band=mh["rows_per_band"], max_bucket=cfg.max_bucket,
+            )
+            dedup.write_assignment(dedup.connected_components(pairs), p)
         out["cluster_state"] = p
     return out
 
@@ -385,16 +392,13 @@ def streaming_gate_sink(
     the latest labels stay on ``fn.state["assign"]`` — write them
     forward with ``dedup.write_assignment`` when the stream drains.
     Batch-boundary independence of the final labels is the fold
-    operator's pinned property (streaming tests). The folded state is
-    eagerly ``localCheckpoint``-ed once per batch and the superseded
-    generation's blocks are freed, so the per-batch cost stays
-    O(batch + affected clusters) and executor storage holds ONE state
-    generation — without the truncation, batch N's fold would re-walk
-    N nested join layers (O(N^2) total) and every generation's blocks
-    would live to session end. The id-diff block attribution assumes
-    no OTHER thread persists RDDs concurrently (the
-    ``connected_components`` caveat); one stream's batches run
-    serially, which satisfies it.
+    operator's pinned property (streaming tests). Each batch runs in
+    its own :func:`~prague_spark.scope.scope`, closed after
+    ``on_batch``. The folded state is eagerly ``localCheckpoint``-ed
+    once per batch into ``fn.scope`` (close it once the final state is
+    written), which frees the superseded state: executor storage holds
+    ONE state generation, and batch N's fold does not re-walk N nested
+    join layers (O(N^2) total).
 
     Semantics inherited from the per-operator foreachBatch twins:
     within-shard duplicate detection is micro-batch-local (a duplicate
@@ -411,49 +415,38 @@ def streaming_gate_sink(
     batch_cfg = (
         _replace(cfg, cluster_state=False) if cfg.cluster_state else cfg
     )
-    state: dict = {"assign": None, "_ckpt_ids": set()}
+    state: dict = {"assign": None}
+    state_scope = scope()
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        gates = gate_shard(batch_df, artifact_dir, id_col, text_col,
-                           batch_cfg)
-        if cfg.cluster_state:
-            spark = batch_df.sparkSession
-            sc = spark.sparkContext
-            if state["assign"] is None:
+        with scope():
+            gates = gate_shard(batch_df, artifact_dir, id_col, text_col,
+                               batch_cfg)
+            if cfg.cluster_state:
+                spark = batch_df.sparkSession
+                prior = state["assign"]
                 p = _path(artifact_dir, "cluster_state")
-                if _artifact_exists(spark, p):
-                    state["assign"] = dedup.read_assignment(
+                if prior is None and _artifact_exists(spark, p):
+                    prior = dedup.read_assignment(
                         spark, p, validate=cfg.validate_state
                     )
-            pairs = gates["minhash"]
-            # materialize the minhash gate's pinned band frame BEFORE
-            # opening the id-diff window: the pin persists lazily, so
-            # its cached RDD would otherwise first register mid-fold
-            # (the fold is the first action on `pairs`), land in
-            # (mid - before), and be freed as if it were a superseded
-            # fold generation — every later consumer of
-            # gates["minhash"] in on_batch would then recompute the
-            # full shard signature pass, and the pin registry would
-            # hold an already-freed handle. The gate ran on THIS
-            # thread, so its thread-local registry is ours to touch.
-            dedup._materialize_generation(dedup._gen_cache("minhash_gate"))
-            before = dedup._persistent_rdd_ids(sc)
-            if state["assign"] is None:
-                folded = dedup.connected_components(pairs)
-            else:
-                folded = dedup.connected_components_against(
-                    state["assign"], pairs
+                folded = (
+                    dedup.connected_components(gates["minhash"])
+                    if prior is None
+                    else dedup.connected_components_against(
+                        prior, gates["minhash"])
                 )
-            mid = dedup._persistent_rdd_ids(sc)
-            new_state, new_ids = dedup._eager_checkpoint_tracked(folded)
-            # the fold's internal label generations and the PREVIOUS
-            # batch's state are both superseded by the fresh checkpoint
-            dedup._free_rdd_ids(sc, (mid - before) | state["_ckpt_ids"])
-            state["assign"], state["_ckpt_ids"] = new_state, new_ids
-            gates["cluster_state"] = state["assign"]
-        on_batch(gates, batch_df, epoch_id)
+                # the fold's internal generations are the batch scope's;
+                # the previous batch's state is superseded once this
+                # one (which reads it) is materialized
+                new_state = state_scope.checkpoint(folded)
+                if state["assign"] is not None:
+                    state_scope.release(state["assign"])
+                state["assign"] = gates["cluster_state"] = new_state
+            on_batch(gates, batch_df, epoch_id)
 
     fn.state = state
+    fn.scope = state_scope
     return fn
 
 
@@ -685,6 +678,7 @@ def _read_artifact(
         ) from e
 
 
+@generation
 def gate_shard(
     shard: DataFrame,
     artifact_dir: str,

@@ -19,11 +19,10 @@ oracle.
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..scope import generation, pin, scope
 from .text import ngrams_expr, tokens_expr
 
 # Mersenne prime modulus for the universal hash family h_i(x) = (a_i x + b_i) mod P.
@@ -262,6 +261,7 @@ def shingles_expr(text, n: int = 3):
     return F.array_distinct(ngrams_expr(toks, n))
 
 
+@generation
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -290,14 +290,12 @@ def ngram_jaccard_pairs(
             F.explode_outer(shingles_expr(F.col(text_col), n)).alias("shingle"),
         ).filter(F.col("shingle").isNotNull())
     )
-    _evict_generation(_gen_cache("jaccard"))
     # consumed by sizes + both sides of the self-join
-    sh = _pin(_gen_cache("jaccard"), sh)
+    sh = pin(sh)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("set_size"))
     if max_df is not None:
-        hot = _pin(
-            _gen_cache("jaccard"),
-            sh.groupBy("shingle").count().filter(F.col("count") > max_df),
+        hot = pin(
+            sh.groupBy("shingle").count().filter(F.col("count") > max_df)
         )
         n_hot = hot.count()
         if n_hot:
@@ -458,6 +456,7 @@ def lsh_band_keys(
     ).select("doc", "bk.band", "bk.key")
 
 
+@generation
 def minhash_lsh_candidates(
     signatures: DataFrame,
     id_col: str,
@@ -483,21 +482,17 @@ def minhash_lsh_candidates(
     Dropped buckets are logged."""
     import logging
 
-    _evict_generation(_gen_cache("minhash"))
     # pin only INTERNALLY-built frames: pinning the caller's signatures
-    # frame would let the next call's eviction unpersist a cache the
-    # caller owns (a band-config sweep over one signatures frame would
+    # frame would let the scope's close unpersist a cache the caller
+    # owns (a band-config sweep over one signatures frame would
     # silently recompute it). banded embeds the signature pipeline, so
     # persisting it alone still computes signatures once.
-    banded = _pin(
-        _gen_cache("minhash"), lsh_band_keys(signatures, id_col, bands, rows_per_band)
-    )
+    banded = pin(lsh_band_keys(signatures, id_col, bands, rows_per_band))
     if max_bucket is not None:
-        hot = _pin(
-            _gen_cache("minhash"),
+        hot = pin(
             banded.groupBy("band", "key")
             .count()
-            .filter(F.col("count") > max_bucket),
+            .filter(F.col("count") > max_bucket)
         )
         n_hot = hot.count()
         if n_hot:
@@ -696,7 +691,9 @@ def extend_minhash_index(
         incremental_counts = (
             _dir_bytes(spark, in_path) >= MINHASH_INCREMENTAL_BYTES
         )
-    try:
+    # the write is the pins' only consumer: free them right after it
+    # (the plan refcount spares any plan-equal live gate pin)
+    with scope():
         (
             _minhash_index_rows(
                 index, df, id_col, text_col,
@@ -708,10 +705,6 @@ def extend_minhash_index(
             .partitionBy("band")
             .parquet(out_path)
         )
-    finally:
-        # the write was the pins' only consumer — free them now (the
-        # refcounted eviction spares any plan-equal live gate pin)
-        _evict_generation(_gen_cache("minhash_extend"))
 
 
 def _minhash_index_rows(
@@ -783,18 +776,14 @@ def _minhash_index_rows(
     # the shard band rows feed BOTH the delta aggregation and the
     # shard-side output (and the delta feeds three more branches), so
     # when the caller will EXECUTE the frame (``pinned`` — the writer
-    # sets it and evicts right after the write) pin them for one
-    # generation: without the pin the O(shard) signature pipeline
-    # would re-evaluate once per consuming branch. Audit-only callers
-    # (bench/test plan pins) leave ``pinned`` off: they never run a
-    # job, and an unmaterialized pin whose plan a LIVE gate pin
-    # happens to share would otherwise hold that shared cache entry's
-    # refcount up and block the gate's own eviction from freeing it.
-    if pinned:
-        _evict_generation(_gen_cache("minhash_extend"))
-        _hold = lambda fr: _pin(_gen_cache("minhash_extend"), fr)
-    else:
-        _hold = lambda fr: fr
+    # sets it inside a scope that closes right after the write) pin
+    # them in the current scope: without the pin the O(shard)
+    # signature pipeline would re-evaluate once per consuming branch.
+    # Audit-only callers (bench/test plan pins) leave ``pinned`` off:
+    # they never run a job, and an unmaterialized pin whose plan a LIVE
+    # gate pin happens to share would otherwise hold that shared cache
+    # entry's refcount up and keep the gate's own close from freeing it.
+    _hold = pin if pinned else (lambda fr: fr)
     shard_rows = _hold(shard_rows)
     # shard-side bucket delta (O(shard) aggregation — the only
     # aggregations in this frame are this and the O(touched) distinct
@@ -884,6 +873,7 @@ def _validate_minhash_index(
             )
 
 
+@generation
 def minhash_candidates_against(
     df: DataFrame,
     index: DataFrame,
@@ -946,11 +936,9 @@ def minhash_candidates_against(
         df, id_col, text_col,
         num_hashes=num_hashes, shingle_n=shingle_n, seed=seed,
     )
-    _evict_generation(_gen_cache("minhash_gate"))
     # consumed by the index join AND (optionally) both self-join sides
-    banded = _pin(
-        _gen_cache("minhash_gate"),
-        lsh_band_keys(sig, id_col, bands=bands, rows_per_band=rows_per_band),
+    banded = pin(
+        lsh_band_keys(sig, id_col, bands=bands, rows_per_band=rows_per_band)
     )
     idx = index.select("doc", "band", "key", *(
         ["bucket_n"] if "bucket_n" in index.columns else []
@@ -1194,6 +1182,7 @@ def _cosine_verify_rows_arrow(
     )
 
 
+@generation
 def embedding_cosine_pairs(
     df: DataFrame,
     id_col: str,
@@ -1227,7 +1216,9 @@ def embedding_cosine_pairs(
     guard as :func:`minhash_lsh_candidates`: one degenerate bucket (e.g.
     the all-zeros bucket every near-zero embedding lands in) turns the
     equi-join quadratic. Dropped buckets are logged; ``max_bucket=None``
-    restores the uncapped join. The exact all-pairs path ignores it."""
+    restores the uncapped join. The exact all-pairs path ignores it.
+    Its pins (vectors, LSH buckets, over-full buckets) belong to the
+    caller's :func:`~prague_spark.scope.scope`."""
     import logging
 
     from .similarity import hyperplane_lsh_buckets
@@ -1245,7 +1236,6 @@ def embedding_cosine_pairs(
             "signed 64-bit long, whose 63 value bits fit planes 1..63 "
             "(use n_bands of smaller signatures for more planes)"
         )
-    _evict_generation(_gen_cache("cosine_pairs"))
     # norm floored at 1e-12: an all-zero embedding must rank as
     # cosine ~0, not raise DIVIDE_BY_ZERO under ANSI mode (greatest is
     # bitwise-identity for real vectors, so existing hashes don't move)
@@ -1274,7 +1264,7 @@ def embedding_cosine_pairs(
                 )
                 for k in range(n_bands)
             ]
-            base = _pin(_gen_cache("cosine_pairs"), base)
+            base = pin(base)
             sig = _band_sig_rows_arrow(base, "_id", "_v", planes_list, dim)
         else:
             for k in range(n_bands):
@@ -1282,7 +1272,7 @@ def embedding_cosine_pairs(
                     base, "_v", n_planes=n_planes, seed=seed + 7919 * k,
                     out=f"_bkt{k}",
                 )
-            base = _pin(_gen_cache("cosine_pairs"), base)
+            base = pin(base)
             sig = base.select(
                 "_id",
                 F.posexplode(
@@ -1290,12 +1280,11 @@ def embedding_cosine_pairs(
                 ).alias("_band", "_bkt"),
             )
         if max_bucket is not None:
-            sig = _pin(_gen_cache("cosine_pairs"), sig)
-            hot = _pin(
-                _gen_cache("cosine_pairs"),
+            sig = pin(sig)
+            hot = pin(
                 sig.groupBy("_band", "_bkt")
                 .count()
-                .filter(F.col("count") > max_bucket),
+                .filter(F.col("count") > max_bucket)
             )
             if hot.count():
                 log.warning(
@@ -1358,11 +1347,10 @@ def embedding_cosine_pairs(
         )
     if n_planes is not None:
         base = hyperplane_lsh_buckets(base, "_v", n_planes=n_planes, seed=seed, out="_bkt")
-    base = _pin(_gen_cache("cosine_pairs"), base)
+    base = pin(base)
     if n_planes is not None and max_bucket is not None:
-        hot = _pin(
-            _gen_cache("cosine_pairs"),
-            base.groupBy("_bkt").count().filter(F.col("count") > max_bucket),
+        hot = pin(
+            base.groupBy("_bkt").count().filter(F.col("count") > max_bucket)
         )
         if hot.count():
             log.warning(
@@ -1388,117 +1376,7 @@ def embedding_cosine_pairs(
     )
 
 
-#: one-generation pinned-storage registries, one per pair generator PER
-#: THREAD: each call frees its OWN previous call's caches at entry, so a
-#: per-shard curation loop never accumulates pinned executor storage
-#: (the leak embedding_cell_pairs used to have — now the discipline for
-#: every generator that persists an intermediate). THREAD-LOCAL so two
-#: concurrent callers in one SparkContext (Spark's scheduler is
-#: thread-safe; pipelines do fan out) cannot evict each other's live
-#: caches mid-plan. The residual leak is bounded and documented: a
-#: thread that exits without a subsequent generator call leaves its last
-#: generation pinned until session end — free it explicitly with
-#: ``_evict_generation(_gen_cache(name))`` if that matters. Interleaved
-#: calls to the SAME generator from ONE thread (build two shards' pair
-#: frames, materialize later) still evict each other — materialize (or
-#: ``persist=False``) before the next call.
-_GEN_LOCAL = threading.local()
-
-
-def _gen_cache(name: str) -> list:
-    """The calling thread's one-generation registry for generator
-    ``name`` (cell_pairs / cosine_pairs / jaccard / minhash /
-    minhash_gate / minhash_extend / contam / spans)."""
-    caches = getattr(_GEN_LOCAL, "caches", None)
-    if caches is None:
-        caches = _GEN_LOCAL.caches = {}
-    return caches.setdefault(name, [])
-
-
-#: PROCESS-GLOBAL refcounts keyed by semanticHash of pinned plans.
-#: Spark uncaches BY PLAN, not by handle, and its cache manager is
-#: JVM-global: two pins whose plans are canonically equal (e.g.
-#: minhash_lsh_candidates' band frame and a minhash_candidates_against
-#: call's, over the same inputs) share ONE cache entry — from ANY
-#: thread. Evicting the stale generation of one registry would
-#: silently unpersist the other registry's LIVE pin mid-query
-#: (observed: the dedup_minhash_lsh plan pin flipping under full-suite
-#: order), so eviction only unpersists when no other live pin —
-#: whichever thread owns it — holds the same semantic hash. The
-#: REGISTRIES stay thread-local (generation ownership), the COUNTS are
-#: global to match the cache manager's scope. Known accepted edges:
-#: a 32-bit semanticHash collision between unrelated live pins skips
-#: one unpersist (a single frame stays pinned until session end —
-#: ~2^-32 per pair); a pin whose semanticHash call raised falls back
-#: to an identity key, so a plan-equal KEYED pin's eviction can still
-#: free it (semanticHash on an analyzed frame essentially never
-#: raises).
-_PIN_COUNTS: dict = {}
-_PIN_LOCK = threading.Lock()
-
-
-def _evict_generation(cache: list, blocking: bool = False) -> None:
-    """Unpersist and drop every frame a previous call left pinned.
-    Runs UNCONDITIONALLY at generator entry (a persist-free 100 TB run
-    must not inherit a smoke-test call's pinned cache); tolerates
-    handles from a stopped/replaced SparkSession. Entries whose plan a
-    LIVE pin still shares (see ``_PIN_COUNTS``) are dropped from the
-    registry without unpersisting — the shared cache entry is the
-    live pin's to free."""
-    while cache:
-        df, h = cache.pop()
-        # the unpersist stays INSIDE the lock: releasing between the
-        # count check and the unpersist would let a concurrent _pin of a
-        # plan-equal frame register a live pin whose shared JVM cache
-        # entry this eviction then frees — the same cross-registry flip
-        # the refcount exists to prevent, in a narrower window. _pin
-        # persists under the same lock, so the two can never interleave
-        # around one cache entry (and never nest: no deadlock).
-        with _PIN_LOCK:
-            n = _PIN_COUNTS.get(h, 0) - 1
-            if n > 0:
-                _PIN_COUNTS[h] = n
-                continue  # another live pin shares this cache entry
-            _PIN_COUNTS.pop(h, None)
-            try:
-                df.unpersist(blocking)
-            except Exception:  # dead JVM context — nothing left to free
-                pass
-
-
-def _pin(cache: list, df: DataFrame) -> DataFrame:
-    """persist() + track in the generator's one-generation registry
-    (refcounted globally by plan hash — see ``_PIN_COUNTS``). The
-    persist() call itself happens under ``_PIN_LOCK`` so it serializes
-    against a concurrent eviction's count-check + unpersist of the same
-    plan: whichever order the lock grants, the surviving pin's entry is
-    live (persist marks lazily — holding the lock is cheap)."""
-    try:
-        h = ("sh", df.semanticHash())
-    except Exception:  # analysis-stage oddity: identity key (unshared)
-        h = ("id", id(df))
-    with _PIN_LOCK:
-        df = df.persist()
-        _PIN_COUNTS[h] = _PIN_COUNTS.get(h, 0) + 1
-    cache.append((df, h))
-    return df
-
-
-def _materialize_generation(cache: list) -> None:
-    """Force each of a generator registry's pinned frames to populate
-    its cache NOW (one count per pin). persist() marks lazily, so a
-    pin's cached RDD only registers in the JVM's persistent-RDD map at
-    first materialization — a caller about to open an id-diff tracking
-    window (:func:`_eager_checkpoint_tracked` / :func:`_free_rdd_ids`,
-    e.g. the streaming gate sink's cluster-state fold) must materialize
-    the pins FIRST, or the pin's id lands inside the window and gets
-    freed as if it were a superseded fold generation — every later
-    consumer then recomputes the pinned pass and the registry holds an
-    already-freed handle."""
-    for df, _h in cache:
-        df.count()
-
-
+@generation
 def embedding_cell_pairs(
     df: DataFrame,
     id_col: str,
@@ -1530,19 +1408,14 @@ def embedding_cell_pairs(
     The assignment (+ norm) frame is read three times (hot-cell count +
     both self-join sides), and its fold expressions dominate recompute
     cost, so by default it is PERSISTED — measured 2.3x at sf0.1.
-    Pinned storage is bounded to ONE generation: each call frees the
-    previous call's cache, so a per-shard curation loop never
-    accumulates (the leak this used to have). ``persist=False`` pins
-    nothing at all — the 100 TB path, where the corpus cannot live in
-    executor storage anyway (materialize the assignment with
-    ``similarity.write_ivf_index`` instead and join over the stored
-    layout). The over-full cell list (at most ``len(centroids)`` rows)
-    is collected driver-side from ONE count aggregation and pushed back
-    as an ``isin`` filter. The one-generation cache is per calling
-    thread (``_GEN_LOCAL`` is thread-local), so concurrent callers on
-    different threads keep their own generations; two calls from ONE
-    thread evict each other, so materialize the first (or pass
-    ``persist=False``) before the second."""
+    The pin belongs to the caller's :func:`~prague_spark.scope.scope`,
+    so a per-shard loop never accumulates pinned storage.
+    ``persist=False`` pins nothing at all — the 100 TB path, where the
+    corpus cannot live in executor storage anyway (materialize the
+    assignment with ``similarity.write_ivf_index`` instead and join
+    over the stored layout). The over-full cell list (at most
+    ``len(centroids)`` rows) is collected driver-side from ONE count
+    aggregation and pushed back as an ``isin`` filter."""
     import logging
 
     from .similarity import _norm_safe, assign_ivf_cells
@@ -1557,9 +1430,8 @@ def embedding_cell_pairs(
         "_n",
         _norm_safe(F.col("_v")),
     )
-    _evict_generation(_gen_cache("cell_pairs"))
     if persist:
-        base = _pin(_gen_cache("cell_pairs"), base)
+        base = pin(base)
     if max_cell is not None:
         hot_cells = [
             r["_cell"]
@@ -1669,46 +1541,6 @@ def embedding_cell_pairs_against(
     return cross.unionByName(within)
 
 
-def _persistent_rdd_ids(sc) -> set:
-    """Ids of every RDD the JVM currently tracks as persistent."""
-    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _eager_checkpoint_tracked(df: DataFrame):
-    """``localCheckpoint(eager=True)`` plus the persistent-RDD ids the
-    call created, so a superseded generation can be FREED later
-    (``DataFrame.unpersist()`` is a no-op on a checkpointed frame — its
-    blocks belong to the internal RDD, not the cache manager). Id-diff
-    attribution assumes no concurrent thread persists RDDs in the same
-    SparkContext during the (synchronous, eager) call — a foreign id
-    landing in the window would be freed with this generation;
-    serialize against other cached work. The same applies to the
-    calling thread's own LAZY pins: a :func:`_pin`-persisted frame
-    only registers its cached RDD at first materialization, so a pin
-    that feeds this checkpoint's input would register inside the
-    window and be freed with the generation — callers whose input
-    plans carry live pins must :func:`_materialize_generation` them
-    first (the streaming gate sink does; the batch fold is safe
-    because connected_components[_against] materialize their pair
-    input through an untracked persist first — pinned in
-    tests/test_curate.py). Shared by the CC iteration loop and the
-    streaming cluster-state fold."""
-    sc = df.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
-    out = df.localCheckpoint(eager=True)
-    return out, _persistent_rdd_ids(sc) - before
-
-
-def _free_rdd_ids(sc, ids) -> None:
-    """Unpersist tracked checkpoint blocks through the JVM RDD handles
-    (see :func:`_eager_checkpoint_tracked`)."""
-    jmap = sc._jsc.getPersistentRDDs()
-    for i in ids:
-        rdd = jmap.get(i)
-        if rdd is not None:
-            rdd.unpersist(False)
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1728,116 +1560,98 @@ def connected_components(
     (O(|E|) shuffle, AQE-coalesced); iterations needed = graph diameter,
     which for dedup graphs (dense near-clique clusters) is small. No
     driver-side graph state — only the converged (node, cluster) frame.
-    Returns (node, cluster_id) for every node appearing in ``pairs``.
+    Returns (node, cluster_id) for every node appearing in ``pairs``,
+    a local checkpoint kept by the caller's :mod:`~prague_spark.scope`.
     """
-    edges = (
+    with scope() as s:
+        labels = _propagate_labels(s, pairs, id_a, id_b, max_iter)
+        s.keep(labels)
+    return labels.select("node", "cluster_id")
+
+
+def _propagate_labels(s, pairs, id_a, id_b, max_iter) -> DataFrame:
+    """:func:`connected_components`' loop: returns the converged labels
+    checkpoint ``(node, _old, cluster_id)``, owned by scope ``s``, which
+    holds one generation at a time."""
+    edges = s.pin(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
         )
         .distinct()
-        .persist()
     )
     # localCheckpoint per iteration: materializes the new labels eagerly
-    # (so unpersisting the previous generation never forces a recompute)
+    # (so releasing the previous generation never forces a recompute)
     # AND truncates the lineage, which would otherwise double per
     # iteration. Executor-local blocks — on executor loss the component
     # labels recompute from the re-run; acceptable for a batch operator.
-    #
-    # DataFrame.unpersist() is a NO-OP on a checkpointed frame (its blocks
-    # belong to the internal RDD, not the cache manager), so superseded
-    # generations are freed through the JVM RDD handle: each checkpoint
-    # records the persistent-RDD ids it created, and _free_rdd_ids
-    # unpersists them once the next generation has materialized. Without
-    # this a deep graph holds every generation in executor storage
-    # simultaneously.
-    sc = pairs.sparkSession.sparkContext
-
-    def _ckpt(df):
-        return _eager_checkpoint_tracked(df)
-
-    def _free(ids):
-        _free_rdd_ids(sc, ids)
-
-    labels, labels_ids = _ckpt(
+    ckpt = labels = s.checkpoint(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("cluster_id", F.col("node"))
     )
-    try:
-        converged = False
-        for _ in range(max_iter):
-            neigh = (
-                edges.join(labels, edges["dst"] == labels["node"])
-                .groupBy("src")
-                .agg(F.min("cluster_id").alias("_nl"))
-            )
-            # two-hop fold (optimization round 14): after the neighbor-min
-            # update, jump once more through the PREVIOUS generation's
-            # labels — new = min(mid, prev_label[mid]) (pointer jumping /
-            # path halving). The prior generation is checkpointed, so the
-            # jump is one slim O(V) equi-join per iteration with no
-            # lineage recompute, while the label-propagation distance per
-            # iteration roughly doubles — and at shard scale each
-            # iteration's fixed job latency (checkpoint + convergence
-            # count) dominates the fold, so halving the rounds halves the
-            # wall. The fixed point is unchanged: labels are always
-            # same-component node ids and decrease monotonically (the
-            # jump target prev_label[mid] is itself a same-component
-            # label), and a zero-change iteration under the fused
-            # operator forces mid == old for every node (old >= mid >=
-            # fused == old), i.e. the plain neighbor-min operator is
-            # stable too — so the fold converges to exactly the
-            # component-minimum labels the one-hop loop produces (pinned
-            # by the cc oracles and the two-hop regression test).
-            prior = labels.select(
-                F.col("node").alias("_jn"), F.col("cluster_id").alias("_jc")
-            )
-            mid = labels.join(
-                neigh, labels["node"] == neigh["src"], "left"
-            ).select(
+    for _ in range(max_iter):
+        neigh = (
+            edges.join(labels, edges["dst"] == labels["node"])
+            .groupBy("src")
+            .agg(F.min("cluster_id").alias("_nl"))
+        )
+        # two-hop fold (optimization round 14): after the neighbor-min
+        # update, jump once more through the PREVIOUS generation's
+        # labels — new = min(mid, prev_label[mid]) (pointer jumping /
+        # path halving). The prior generation is checkpointed, so the
+        # jump is one slim O(V) equi-join per iteration with no
+        # lineage recompute, while the label-propagation distance per
+        # iteration roughly doubles — and at shard scale each
+        # iteration's fixed job latency (checkpoint + convergence
+        # count) dominates the fold, so halving the rounds halves the
+        # wall. The fixed point is unchanged: labels are always
+        # same-component node ids and decrease monotonically (the
+        # jump target prev_label[mid] is itself a same-component
+        # label), and a zero-change iteration under the fused
+        # operator forces mid == old for every node (old >= mid >=
+        # fused == old), i.e. the plain neighbor-min operator is
+        # stable too — so the fold converges to exactly the
+        # component-minimum labels the one-hop loop produces (pinned
+        # by the cc oracles and the two-hop regression test).
+        prior = labels.select(
+            F.col("node").alias("_jn"), F.col("cluster_id").alias("_jc")
+        )
+        mid = labels.join(
+            neigh, labels["node"] == neigh["src"], "left"
+        ).select(
+            F.col("node"),
+            F.col("cluster_id").alias("_old"),
+            F.least(
+                F.col("cluster_id"),
+                F.coalesce(F.col("_nl"), F.col("cluster_id")),
+            ).alias("_mid"),
+        )
+        updated = s.checkpoint(
+            mid.join(prior, mid["_mid"] == prior["_jn"], "left")
+            .select(
                 F.col("node"),
-                F.col("cluster_id").alias("_old"),
+                F.col("_old"),
                 F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("_nl"), F.col("cluster_id")),
-                ).alias("_mid"),
+                    F.col("_mid"),
+                    F.coalesce(F.col("_jc"), F.col("_mid")),
+                ).alias("cluster_id"),
             )
-            updated, updated_ids = _ckpt(
-                mid.join(prior, mid["_mid"] == prior["_jn"], "left")
-                .select(
-                    F.col("node"),
-                    F.col("_old"),
-                    F.least(
-                        F.col("_mid"),
-                        F.coalesce(F.col("_jc"), F.col("_mid")),
-                    ).alias("cluster_id"),
-                )
-            )
-            changed = updated.filter(F.col("cluster_id") < F.col("_old")).count()
-            # the new generation is materialized and lineage-truncated —
-            # the previous generation's blocks are dead weight now
-            _free(labels_ids)
-            labels, labels_ids = updated.select("node", "cluster_id"), updated_ids
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise ValueError(
-                f"connected_components did not converge in {max_iter} "
-                "iterations (graph diameter exceeds the budget) — raise "
-                "max_iter; returning partial labels would split clusters "
-                "silently"
-            )
-        return labels
-    except Exception:
-        # nothing is returned on an error path (non-convergence included),
-        # so the live generation's checkpoint blocks would leak for the
-        # rest of the session — free them before re-raising
-        _free(labels_ids)
-        raise
-    finally:
-        edges.unpersist()
+        )
+        changed = updated.filter(F.col("cluster_id") < F.col("_old")).count()
+        # the new generation is materialized and lineage-truncated —
+        # the previous generation's blocks are dead weight now
+        s.release(ckpt)
+        ckpt, labels = updated, updated.select("node", "cluster_id")
+        if changed == 0:
+            s.release(edges)
+            return ckpt
+    raise ValueError(
+        f"connected_components did not converge in {max_iter} "
+        "iterations (graph diameter exceeds the budget) — raise "
+        "max_iter; returning partial labels would split clusters "
+        "silently"
+    )
 
 
 def eval_minima_index(
@@ -1862,6 +1676,7 @@ def eval_minima_index(
     )
 
 
+@generation
 def contamination(
     train_df: DataFrame,
     eval_df: DataFrame,
@@ -1900,10 +1715,7 @@ def contamination(
     # persisted: consumed by BOTH the per-doc sizes aggregation and the
     # hits join — without it the O(len*w) md5 winnowing scan of the whole
     # training corpus runs twice (same pattern as ngram_jaccard_pairs)
-    _evict_generation(_gen_cache("contam"))
-    t = _pin(
-        _gen_cache("contam"), winnow_minima(train_df, id_col, text_col, k, w).alias("t")
-    )
+    t = pin(winnow_minima(train_df, id_col, text_col, k, w).alias("t"))
     e_idx = eval_minima_index(eval_df, id_col, text_col, k, w)
     sizes = t.groupBy(id_col).agg(F.count("*").alias("_n_minima"))
     hits = (
@@ -1963,13 +1775,14 @@ def connected_components_against(
                 f"column {c!r} — expected connected_components output "
                 "(node, cluster_id)"
             )
-    # pin a PROJECTION of the caller's pair frame (never the caller's
-    # own handle — unpersisting that would evict their cache) for the
-    # duration of the call: it is consumed by the affected-cluster walk
-    # and the closure's edge build, both of which materialize eagerly
-    # below, so the pin is dropped before returning the lazy result
-    np_pinned = new_pairs.select(id_a, id_b).persist()
-    try:
+    with scope() as s:
+        # pin a PROJECTION of the caller's pair frame (never the caller's
+        # own handle — unpersisting that would evict their cache) for the
+        # duration of the call: it is consumed by the affected-cluster
+        # walk and the closure's edge build, both of which materialize
+        # eagerly below, so the pin is dropped before returning the lazy
+        # result
+        np_pinned = s.pin(new_pairs.select(id_a, id_b))
         touched = (
             np_pinned.select(F.col(id_a).alias("node"))
             .unionByName(np_pinned.select(F.col(id_b).alias("node")))
@@ -1977,49 +1790,46 @@ def connected_components_against(
         )
         # the only prior clusters whose labels can change are those with
         # a member among the new pairs' nodes — two slim equi-joins.
-        # Eager localCheckpoint: the frame is tiny (one id per affected
+        # Eager local checkpoint: the frame is tiny (one id per affected
         # cluster) and the returned untouched-branch plan must scan THIS,
         # not re-derive the shard's whole pair pipeline at output time
         # (same lineage-truncation discipline as connected_components;
-        # like the labels it returns, the blocks live for the session).
-        affected = (
+        # like the labels it returns, it is kept past this scope).
+        affected = s.checkpoint(
             assign.join(touched, "node", "left_semi")
             .select("cluster_id")
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # consumed by the validation count AND the closure's edge build
-        sub = assign.join(affected, "cluster_id", "left_semi").persist()
-        try:
-            # every affected cluster must contain its own representative
-            # — otherwise the star under-connects and the closure
-            # silently splits (a truncated/filtered frame, not a valid
-            # prior state)
-            n_bad = (
-                sub.select(F.col("cluster_id").alias("node")).distinct()
-                .join(sub.select("node"), "node", "left_anti")
-                .count()
+        sub = s.pin(assign.join(affected, "cluster_id", "left_semi"))
+        # every affected cluster must contain its own representative
+        # — otherwise the star under-connects and the closure
+        # silently splits (a truncated/filtered frame, not a valid
+        # prior state)
+        n_bad = (
+            sub.select(F.col("cluster_id").alias("node")).distinct()
+            .join(sub.select("node"), "node", "left_anti")
+            .count()
+        )
+        if n_bad:
+            raise ValueError(
+                f"connected_components_against: {n_bad} cluster_id(s) "
+                "in the prior assignment have no corresponding member "
+                "row — the assignment is truncated or filtered, and "
+                "merging against it would silently split clusters"
             )
-            if n_bad:
-                raise ValueError(
-                    f"connected_components_against: {n_bad} cluster_id(s) "
-                    "in the prior assignment have no corresponding member "
-                    "row — the assignment is truncated or filtered, and "
-                    "merging against it would silently split clusters"
-                )
-            stars = sub.filter(F.col("node") != F.col("cluster_id")).select(
-                F.col("node").alias(id_a), F.col("cluster_id").alias(id_b)
-            )
-            merged = connected_components(
-                stars.unionByName(np_pinned),
-                id_a, id_b, max_iter=max_iter,
-            )
-        finally:
-            sub.unpersist()
-    finally:
-        np_pinned.unpersist()
+        stars = sub.filter(F.col("node") != F.col("cluster_id")).select(
+            F.col("node").alias(id_a), F.col("cluster_id").alias(id_b)
+        )
+        merged = _propagate_labels(
+            s, stars.unionByName(np_pinned), id_a, id_b, max_iter
+        )
+        s.keep(affected)
+        s.keep(merged)
     untouched = assign.join(affected, "cluster_id", "left_anti")
-    return untouched.select("node", "cluster_id").unionByName(merged)
+    return untouched.select("node", "cluster_id").unionByName(
+        merged.select("node", "cluster_id")
+    )
 
 
 def write_assignment(assign: DataFrame, path: str) -> None:
@@ -2145,6 +1955,7 @@ def canonical_by_score(
 # relational operators instead of a suffix array)
 # ---------------------------------------------------------------------------
 
+@generation
 def duplicate_spans(
     df: DataFrame,
     id_col: str,
@@ -2179,15 +1990,14 @@ def duplicate_spans(
     shorter than ``k`` tokens emit no grams and so no spans.
 
     The (id, pos, gram-hash) frame feeds BOTH the recurring-gram
-    aggregation and the semi-join probe side; it is persisted (one
-    generation, freed by the next call — the module discipline) so the
-    dominant tokenize+md5 scan runs once, not twice. ``persist=False``
+    aggregation and the semi-join probe side; it is pinned in the
+    caller's scope (see :mod:`prague_spark.scope`) so the dominant
+    tokenize+md5 scan runs once, not twice. ``persist=False``
     pins nothing (the 100 TB path: materialize the gram frame yourself
     if two scans are worse than storage)."""
     pos_grams = _span_gram_positions(df, id_col, text_col, k)
-    _evict_generation(_gen_cache("spans"))
     if persist:
-        pos_grams = _pin(_gen_cache("spans"), pos_grams)
+        pos_grams = pin(pos_grams)
     recurring = (
         pos_grams.groupBy("_h")
         .agg(F.count("*").alias("_c"))

@@ -26,6 +26,7 @@ from .ops.features import one_hot
 from .ops.response import Y_COL, preprocess_response
 from .ops.standardize import StandardizerModel, fit_standardizer
 from .pipeline import dedup, similarity, text
+from .scope import generation, pin as scope_pin
 
 # The driver's correctness gate runs both engines at this scale factor;
 # data-dependent oracle literals are derived from it at import time.
@@ -1821,6 +1822,7 @@ SQL_DEDUP_NGRAM3 = """
 """
 
 
+@generation
 def q_dedup_minhash_lsh(spark, sf_dir):
     """The full sub-quadratic MinHash dedup pipeline in one tagged tall
     output (registry merge, round 4 — absorbs the former dedup_minhash
@@ -1842,11 +1844,13 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     write/validate/gate path against SQL."""
     docs = load(spark, sf_dir, "documents")
     # the caller owns the signatures cache (minhash_lsh_candidates pins
-    # only its own frames): persist it here, where the signature
-    # pipeline feeds the banding AND both sides of the estimate's join
-    sig = dedup.minhash_signatures(
+    # only its own frames): pin it here, where the signature pipeline
+    # feeds the banding AND both sides of the estimate's join. The body
+    # is one generation: its pins and the generators' stay live for the
+    # returned frame and are freed by this thread's next pinning call.
+    sig = scope_pin(dedup.minhash_signatures(
         docs, "doc_id", "text", num_hashes=_MH_N, shingle_n=1
-    ).persist()
+    ))
     pairs = dedup.minhash_lsh_candidates(sig, "doc_id", bands=2, rows_per_band=2)
     out = dedup.minhash_jaccard_estimate(sig, pairs)
     sig_rows = sig.select(

@@ -63,3 +63,15 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def persistent_rdds(spark):
+    """``persistent_rdds() -> set``: ids of every RDD the JVM currently
+    holds as persistent (cached frames and local checkpoints)."""
+    jsc = spark.sparkContext._jsc
+
+    def ids():
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    return ids

@@ -492,12 +492,15 @@ def test_embedding_extend_overlap_guard(spark, sf_dir, tmp_path):
         )
 
 
-def test_streaming_sink_state_generations_freed(docs, spark, tmp_path):
+def test_streaming_sink_state_generations_freed(docs, spark, tmp_path,
+                                                persistent_rdds):
     """The streaming fold's state is checkpointed once per batch and the
     SUPERSEDED generation's blocks are freed — without this, a long
     stream accumulates every generation in executor storage and batch
-    N's fold re-walks N nested layers. The sink fn is a plain function,
-    so drive it directly with two static 'batches'."""
+    N's fold re-walks N nested layers. Everything else a batch pins or
+    checkpoints is freed with its batch scope, and closing the sink's
+    scope frees the last state. The sink fn is a plain function, so
+    drive it directly with two static 'batches'."""
     from prague_spark.pipeline.curate import streaming_gate_sink
 
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
@@ -509,29 +512,29 @@ def test_streaming_sink_state_generations_freed(docs, spark, tmp_path):
     build_curation_artifacts(corpus, art, "doc_id", "text", cfg)
     fn = streaming_gate_sink(art, "doc_id", "text",
                              lambda g, b, e: None, cfg)
-    sc = spark.sparkContext
-    b1 = shard.filter(F.col("doc_id") % 2 == 0)
-    b2 = shard.filter(F.col("doc_id") % 2 == 1)
-    fn(b1, 0)
-    gen1 = set(fn.state["_ckpt_ids"])
-    assert gen1 and gen1 <= dedup._persistent_rdd_ids(sc)
+    base = persistent_rdds()
+    fn(shard.filter(F.col("doc_id") % 2 == 0), 0)
+    gen1 = _state_rdd_id(fn)
+    assert persistent_rdds() == base | {gen1}
     n1 = fn.state["assign"].count()
-    fn(b2, 1)
-    gen2 = set(fn.state["_ckpt_ids"])
-    live = dedup._persistent_rdd_ids(sc)
-    assert gen2 and gen2 <= live
-    assert not (gen1 & live), "superseded state generation not freed"
+    fn(shard.filter(F.col("doc_id") % 2 == 1), 1)
+    gen2 = _state_rdd_id(fn)
+    assert gen2 != gen1
+    assert persistent_rdds() == base | {gen2}, (
+        "superseded state generation not freed"
+    )
     # the surviving state is the full fold (usable after the free)
     assert fn.state["assign"].count() >= n1
+    fn.scope.close()
+    assert persistent_rdds() == base
 
 
-def test_streaming_sink_fold_window_spares_gate_pin(docs, spark, tmp_path):
-    """The fold's id-diff free window must not swallow the minhash
-    gate's pinned band frame: the pin persists lazily, so without the
-    pre-window materialization its cached RDD registers mid-fold and
-    gets freed with the fold's internal generations — every later
-    consumer of gates['minhash'] in on_batch then recomputes the full
-    shard signature pass against an already-freed handle."""
+@pytest.mark.slow
+def test_streaming_sink_storage_flat_over_20_batches(docs, spark, tmp_path,
+                                                     persistent_rdds):
+    """Twenty batches through the folding sink leave the JVM's
+    persistent-RDD count where the first batch left it: one state
+    generation, no per-batch residue."""
     from prague_spark.pipeline.curate import streaming_gate_sink
 
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
@@ -541,26 +544,63 @@ def test_streaming_sink_fold_window_spares_gate_pin(docs, spark, tmp_path):
         tiers=("exact", "minhash"), minhash=_MH, cluster_state=True,
     )
     build_curation_artifacts(corpus, art, "doc_id", "text", cfg)
-    captured: dict = {}
     fn = streaming_gate_sink(art, "doc_id", "text",
-                             lambda g, b, e: captured.update(g), cfg)
-    sc = spark.sparkContext
-    for i, batch in enumerate((shard.filter(F.col("doc_id") % 2 == 0),
-                               shard.filter(F.col("doc_id") % 2 == 1))):
-        base = dedup._persistent_rdd_ids(sc)
-        fn(batch, i)
-        live = dedup._persistent_rdd_ids(sc)
-        # ids this batch ADDED and kept = the fresh state checkpoint
-        # plus the gate's pin — the pin must have survived the window
-        pin_ids = live - base - set(fn.state["_ckpt_ids"])
-        assert pin_ids, (
-            "the minhash gate's pinned band frame was freed by the "
-            "fold's id-diff window"
-        )
+                             lambda g, b, e: g["minhash"].count(), cfg)
+    base = persistent_rdds()
+    counts = []
+    for i in range(20):
+        fn(shard.filter((F.col("doc_id") / 5).cast("long") % 20 == i), i)
+        counts.append(len(persistent_rdds()))
+    assert counts == [len(base) + 1] * 20, counts
+    fn.scope.close()
+    assert persistent_rdds() == base
+
+
+def _state_rdd_id(fn) -> int:
+    # the RDD behind the sink's state checkpoint
+    return int(
+        fn.state["assign"]._jdf.queryExecution().analyzed().rdd().id()
+    )
+
+
+def test_streaming_sink_fold_window_spares_gate_pin(docs, spark, tmp_path,
+                                                    persistent_rdds):
+    """The fold must not free the minhash gate's pinned band frame: the
+    pin persists lazily and first materializes mid-fold, and on_batch's
+    later consumers of gates['minhash'] must still read it, not
+    recompute the full shard signature pass. After the batch, the pin
+    is freed with the batch scope."""
+    from prague_spark.pipeline.curate import streaming_gate_sink
+    from prague_spark.scope import _CURRENT
+
+    corpus = docs.filter(F.col("doc_id") % 5 != 0)
+    shard = docs.filter(F.col("doc_id") % 5 == 0)
+    art = str(tmp_path / "art")
+    cfg = CurationConfig(
+        tiers=("exact", "minhash"), minhash=_MH, cluster_state=True,
+    )
+    build_curation_artifacts(corpus, art, "doc_id", "text", cfg)
+    seen: list = []
+
+    def on_batch(gates, batch_df, epoch_id):
+        pins = [df for df, _free in _CURRENT.get()._owned
+                if df.storageLevel.useMemory or df.storageLevel.useDisk]
+        assert pins, "the minhash gate's pin was freed by the fold"
+        live = persistent_rdds()
         # a later consumer of the gate output hits the LIVE cache: the
         # recount registers nothing new in the persistent-RDD map
-        captured["minhash"].count()
-        assert dedup._persistent_rdd_ids(sc) == live
+        gates["minhash"].count()
+        assert persistent_rdds() == live
+        seen.append(epoch_id)
+
+    fn = streaming_gate_sink(art, "doc_id", "text", on_batch, cfg)
+    base = persistent_rdds()
+    for i, batch in enumerate((shard.filter(F.col("doc_id") % 2 == 0),
+                               shard.filter(F.col("doc_id") % 2 == 1))):
+        fn(batch, i)
+        assert persistent_rdds() == base | {_state_rdd_id(fn)}
+    assert seen == [0, 1]
+    fn.scope.close()
 
 
 def test_readme_streaming_sink_quickstart(docs, spark, tmp_path):
@@ -621,16 +661,17 @@ def test_readme_streaming_sink_quickstart(docs, spark, tmp_path):
     assert restored.count() == fn.state["assign"].count()
 
 
-def test_batch_gate_cluster_fold_spares_gate_pin(docs, spark, tmp_path):
+def test_batch_gate_cluster_fold_spares_gate_pin(docs, spark, tmp_path,
+                                                 persistent_rdds):
     """The BATCH twin of the streaming pin property: gate_shard's eager
-    cluster fold internally checkpoints with id-diff tracking, and the
-    minhash gate's lazily-persisted band pin must SURVIVE it. Today
-    that holds by construction — connected_components_against persists
-    its pair input and first materializes it (pin included) in an
-    untracked action — but a refactor that moves the pairs' first
-    materialization inside a tracked window would silently free the
-    live pin (the streaming sink needed an explicit pre-window
-    materialization for exactly this); this test pins the property."""
+    cluster fold checkpoints internally, and the minhash gate's
+    lazily-persisted band pin must SURVIVE it. A scope around the gate,
+    its materialization and the fold then frees every pin and local
+    checkpoint they made: the persistent-RDD set is back to where it
+    was."""
+    import prague_spark as ps
+    from prague_spark.pipeline.curate import materialize_gates
+
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     shard = docs.filter(F.col("doc_id") % 5 == 0)
     art = str(tmp_path / "art")
@@ -638,26 +679,26 @@ def test_batch_gate_cluster_fold_spares_gate_pin(docs, spark, tmp_path):
         tiers=("exact", "minhash"), minhash=_MH, cluster_state=True,
     )
     build_curation_artifacts(corpus, art, "doc_id", "text", cfg)
-    sc = spark.sparkContext
-    gates = gate_shard(shard, art, "doc_id", "text", cfg)
-    # later consumers of the gate output hit the LIVE pin and register
-    # nothing new in the persistent-RDD map
-    n1 = gates["minhash"].count()
-    live = dedup._persistent_rdd_ids(sc)
-    assert gates["minhash"].count() == n1
-    assert dedup._persistent_rdd_ids(sc) == live
-    # the discriminator: the pin must still OWN a persistent RDD — a
-    # deliberate eviction through the registry frees it, shrinking the
-    # persistent map. (A fold-window-freed pin leaves nothing to free:
-    # its buffers RDD is already level-NONE and recounts silently
-    # recompute without re-registering, which is why the recount
-    # assertions above cannot catch the bug alone.)
-    dedup._evict_generation(dedup._gen_cache("minhash_gate"))
-    freed = live - dedup._persistent_rdd_ids(sc)
-    assert freed, (
-        "the minhash gate's pinned band frame was already freed by the "
-        "cluster fold's internal checkpoint windows"
-    )
+    before = persistent_rdds()
+    with ps.scope() as s:
+        gates = gate_shard(shard, art, "doc_id", "text", cfg)
+        pins = [df for df, _free in s._owned if df.is_cached]
+        assert pins
+        counts = materialize_gates(gates)
+        # later consumers of the gate output hit the LIVE pin and
+        # register nothing new in the persistent-RDD map
+        live = persistent_rdds()
+        assert gates["minhash"].count() == counts["minhash"]
+        assert gates["cluster_state"].count() == counts["cluster_state"]
+        assert persistent_rdds() == live
+        # the discriminator: each pin still OWNS its JVM cache entry (a
+        # pin freed mid-fold recounts silently by recomputing, which
+        # the assertions above cannot catch alone)
+        assert all(
+            df.storageLevel.useMemory or df.storageLevel.useDisk
+            for df in pins
+        )
+    assert persistent_rdds() == before
 
 
 def test_overlap_tier_jobs_reports_every_failure():

@@ -810,46 +810,48 @@ def test_embedding_cell_pairs_semdedup(emb, spark):
     assert capped.count() == 0
 
 
-def test_embedding_cell_pairs_cache_discipline(emb, spark):
+def test_embedding_cell_pairs_cache_discipline(emb, spark, persistent_rdds):
     """The operator's pinned storage is bounded: persist=False pins
-    NOTHING (the 100 TB path), and the default persist=True keeps at
-    most ONE generation alive — a per-shard curation loop frees each
+    NOTHING (the 100 TB path), an unscoped caller holds ONE implicit
+    generation per thread — a per-shard curation loop frees each
     previous call's assignment cache instead of accumulating until
-    eviction churn (the regression this pins)."""
-    from prague_spark.pipeline.dedup import _evict_generation, _gen_cache
-
-    sc = spark.sparkContext
-    _evict_generation(_gen_cache("cell_pairs"), blocking=True)
-    spark.catalog.clearCache()
-
-    def live():
-        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    eviction churn (the regression this pins) — and a scope frees its
+    pin on close."""
+    import prague_spark as ps
 
     vec = emb.withColumn(
         "vec", F.transform("embedding", lambda x: x.cast("double"))
     ).select("vec_id", "vec")
     C = similarity.train_ivf_centroids(vec, "vec", n_centroids=8, iters=5)
-    before = live()
-    # persist=False: no NEW pinned ids at all (subset, not equality: an
-    # earlier test's ASYNC unpersist may complete between snapshots)
+    # the first call frees whatever generation an earlier test left on
+    # this thread, so compare by subset, not equality
+    before = persistent_rdds()
     dedup.embedding_cell_pairs(
         vec, "vec_id", "vec", C, threshold=0.3, persist=False
     ).count()
-    assert not (live() - before)
+    assert not (persistent_rdds() - before)
     dedup.embedding_cell_pairs(
         vec, "vec_id", "vec", C, threshold=0.3, max_cell=1, persist=False
     ).count()
-    assert not (live() - before)
-    # default: repeated per-shard calls hold at most ONE generation
+    assert not (persistent_rdds() - before)
+    # default: repeated per-shard calls hold exactly ONE generation
     for _ in range(3):
         dedup.embedding_cell_pairs(
             vec, "vec_id", "vec", C, threshold=0.3
         ).count()
-        assert len(live() - before) <= 1
-    # and the handles are releasable (through the refcounted evictor,
-    # never manual pops — those would strand the global counts)
-    _evict_generation(_gen_cache("cell_pairs"), blocking=True)
-    assert not (live() - before)
+        assert len(persistent_rdds() - before) == 1
+    # the next unscoped call frees the thread's generation
+    dedup.embedding_cell_pairs(
+        vec, "vec_id", "vec", C, threshold=0.3, persist=False
+    ).count()
+    assert not (persistent_rdds() - before)
+    # a scope owns its own pin and frees it on close
+    with ps.scope():
+        dedup.embedding_cell_pairs(
+            vec, "vec_id", "vec", C, threshold=0.3
+        ).count()
+        assert len(persistent_rdds() - before) == 1
+    assert not (persistent_rdds() - before)
 
 
 def test_ivf_partitioned_index_prunes(emb, spark, tmp_path):
@@ -982,26 +984,31 @@ def test_resize_images_plumbing(spark):
     assert a == b
 
 
-def test_connected_components_frees_superseded_generations(spark):
+def test_connected_components_frees_superseded_generations(
+    spark, persistent_rdds
+):
+    import prague_spark as ps
     from prague_spark.pipeline.dedup import connected_components
 
-    sc = spark.sparkContext
-
-    def live():
-        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-    before = live()
     # a length-6 chain needs several label-propagation iterations
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 7)], "id_a long, id_b long"
     )
+    before = persistent_rdds()
     out = connected_components(pairs)
-    created = live() - before
     # exactly ONE labels generation (the returned frame) may stay live;
     # every superseded checkpoint and the edge cache must be gone
+    created = persistent_rdds() - before
     assert len(created) == 1, f"leaked generations: {created}"
     assert {int(r["cluster_id"]) for r in out.collect()} == {1}
-
+    # inside a scope the returned generation is the scope's, freed on
+    # close
+    before = persistent_rdds()
+    with ps.scope():
+        out = connected_components(pairs)
+        assert len(persistent_rdds() - before) == 1
+        assert {int(r["cluster_id"]) for r in out.collect()} == {1}
+    assert not (persistent_rdds() - before)
 
 
 def test_pack_chunks_partitions_tokens(docs):
@@ -1351,20 +1358,19 @@ def test_boilerplate_index_and_strip(spark):
     assert out[5] == "entirely unique document"
 
 
-def test_pair_generator_cache_discipline(docs, emb, spark):
+def test_pair_generator_cache_discipline(docs, emb, spark, persistent_rdds):
     """Every pair generator that persists an intermediate keeps at most
-    ONE generation pinned: a per-shard curation loop frees the previous
-    call's caches instead of accumulating pinned executor storage until
-    eviction churn (the leak embedding_cell_pairs used to have, now the
-    module-wide discipline). unpersist is async, so the bound is two
-    generations, not one — the point is it does not GROW with calls."""
-    from prague_spark.pipeline.dedup import _evict_generation, _gen_cache
+    ONE generation pinned per thread when called without a scope: a
+    per-shard curation loop frees the previous call's caches instead of
+    accumulating pinned executor storage until eviction churn (the leak
+    embedding_cell_pairs used to have). Inside a scope the pins are the
+    scope's and are freed on close."""
+    import prague_spark as ps
 
-    sc = spark.sparkContext
-
-    def live():
-        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
+    # materialize the cached fixtures first: their own cache entries
+    # would otherwise register inside the first generation
+    docs.count()
+    emb.count()
     small = docs.limit(40)
     vec = (
         emb.limit(40)
@@ -1373,30 +1379,28 @@ def test_pair_generator_cache_discipline(docs, emb, spark):
     )
     sigs = dedup.minhash_signatures(small, "doc_id", "text", num_hashes=8)
     cases = [
-        # (cache, frames pinned per generation, call)
-        (_gen_cache("jaccard"), 2,
-         lambda: dedup.ngram_jaccard_pairs(small, "doc_id", "text", n=1,
-                                           threshold=0.9, max_df=30)),
-        (_gen_cache("minhash"), 3,
-         lambda: dedup.minhash_lsh_candidates(sigs, "doc_id", bands=2,
-                                              rows_per_band=4)),
-        (_gen_cache("cosine_pairs"), 2,
-         lambda: dedup.embedding_cosine_pairs(vec, "vec_id", "vec",
-                                              threshold=0.9, n_planes=4)),
-        (_gen_cache("contam"), 1,
-         lambda: dedup.contamination(small, small.limit(5), "doc_id", "text")),
+        # (frames pinned per generation, call)
+        (2, lambda: dedup.ngram_jaccard_pairs(small, "doc_id", "text", n=1,
+                                              threshold=0.9, max_df=30)),
+        (2, lambda: dedup.minhash_lsh_candidates(sigs, "doc_id", bands=2,
+                                                 rows_per_band=4)),
+        (2, lambda: dedup.embedding_cosine_pairs(vec, "vec_id", "vec",
+                                                 threshold=0.9, n_planes=4)),
+        (1, lambda: dedup.contamination(small, small.limit(5), "doc_id",
+                                        "text")),
     ]
-    for cache, gen_size, run in cases:
-        _evict_generation(cache)
-        before = live()
+    for gen_size, run in cases:
+        before = persistent_rdds()
         for _ in range(4):
             run().count()
-            created = live() - before
-            assert len(created) <= 2 * gen_size, (
+            created = persistent_rdds() - before
+            assert len(created) <= gen_size, (
                 f"accumulating pinned caches: {created}"
             )
-        # and the handles are releasable
-        _evict_generation(cache)
+        outside = persistent_rdds()
+        with ps.scope():
+            run().count()
+        assert persistent_rdds() == outside
 
 
 def test_zero_vector_embeddings_do_not_fail(spark):
@@ -2042,40 +2046,42 @@ def test_span_index_mixed_k_raises(span_docs, spark, tmp_path):
 
 
 def test_gen_caches_are_thread_local(docs, spark):
-    """Two concurrent callers of the same pair generator must not evict
-    each other's live caches: the one-generation registry is per-thread
-    and the pin REFCOUNTS are process-global (Spark's cache manager is
-    JVM-global and plan-keyed, so the two threads' canonically-equal
-    pins share ONE cache entry — a thread-local count would let the
-    worker's eviction free the main thread's live data)."""
+    """Two concurrent unscoped callers of the same pair generator must
+    not free each other's live caches: the implicit generation is
+    per-thread and the pin REFCOUNTS are process-global (Spark's cache
+    manager is JVM-global and plan-keyed, so the two threads'
+    canonically-equal pins share ONE cache entry — a per-thread count
+    would let the worker's next generation free the main thread's live
+    data)."""
     import threading
 
-    from prague_spark.pipeline.dedup import _evict_generation, _gen_cache
+    from prague_spark.scope import _THREAD
 
     small = docs.limit(30)
-    _evict_generation(_gen_cache("jaccard"))
-    dedup.ngram_jaccard_pairs(
-        small, "doc_id", "text", n=1, threshold=0.9, max_df=30
-    ).count()
+
+    def run():
+        dedup.ngram_jaccard_pairs(
+            small, "doc_id", "text", n=1, threshold=0.9, max_df=30
+        ).count()
+        return [df for df, _free in _THREAD.generation._owned]
+
     def _really_cached(df):
         lvl = df.storageLevel  # JVM cache-manager state, not the flag
         return lvl.useMemory or lvl.useDisk
 
-    mine = list(_gen_cache("jaccard"))
-    assert mine and all(_really_cached(df) for df, _h in mine)
+    mine = run()
+    assert mine and all(_really_cached(df) for df in mine)
 
     errs: list = []
 
     def other():
         try:
-            dedup.ngram_jaccard_pairs(
-                small, "doc_id", "text", n=1, threshold=0.9, max_df=30
-            ).count()
-            # the worker's own registry is its own generation
-            assert _gen_cache("jaccard") and all(
-                _really_cached(df) for df, _h in _gen_cache("jaccard")
-            )
-            _evict_generation(_gen_cache("jaccard"))
+            # the worker's first generation is its own; its second call
+            # frees the first, whose plans the main thread's pins share
+            theirs = run()
+            assert theirs and all(_really_cached(df) for df in theirs)
+            assert not set(map(id, theirs)) & set(map(id, mine))
+            run()
         except Exception as e:  # surface into the main thread
             errs.append(e)
 
@@ -2083,10 +2089,9 @@ def test_gen_caches_are_thread_local(docs, spark):
     t.start()
     t.join(120)
     assert not errs, errs
-    # main thread's generation survived the concurrent call — REAL
+    # main thread's generation survived the concurrent calls — REAL
     # cache state, not the client-side flag
-    assert all(_really_cached(df) for df, _h in mine)
-    _evict_generation(_gen_cache("jaccard"))
+    assert all(_really_cached(df) for df in mine)
 
 
 # ---------------------------------------------------------------------------
@@ -2943,14 +2948,14 @@ def test_minhash_incremental_rejects_inconsistent_bucket_counts(
 
 
 def test_cross_generator_eviction_keeps_shared_pins(docs, spark):
-    """Spark uncaches BY PLAN, not by handle: when two registries pin
+    """Spark uncaches BY PLAN, not by handle: when two scopes pin
     canonically-equal frames (the gate's band rows and
     minhash_lsh_candidates' over the same inputs), they share ONE cache
-    entry — evicting one registry's STALE generation must not unpersist
-    the other's LIVE pin. Before the refcount fix this flipped the
-    dedup_minhash_lsh plan pin under full-suite order (the pinned band
-    frame silently vanished from the audited plan)."""
-    from prague_spark.pipeline.dedup import _evict_generation, _gen_cache
+    entry — closing one scope must not unpersist the other's LIVE pin.
+    Before the refcount fix this flipped the dedup_minhash_lsh plan pin
+    under full-suite order (the pinned band frame silently vanished
+    from the audited plan)."""
+    import prague_spark as ps
 
     kw = dict(num_hashes=4, shingle_n=1, seed=42, bands=2, rows_per_band=2)
     small = docs.limit(50)
@@ -2958,12 +2963,6 @@ def test_cross_generator_eviction_keeps_shared_pins(docs, spark):
         small, "doc_id", "text", num_hashes=4, shingle_n=1
     )
     bare_idx = dedup.lsh_band_keys(sig, "doc_id", bands=2, rows_per_band=2)
-    # generation 1 in the GATE registry: its pinned band frame is
-    # canonically equal to what minhash_lsh_candidates pins below
-    dedup.minhash_candidates_against(
-        small, bare_idx, "doc_id", "text", include_shard_pairs=False, **kw
-    ).count()
-    dedup.minhash_lsh_candidates(sig, "doc_id", bands=2, rows_per_band=2)
 
     def _really_cached(df):
         # storageLevel queries the JVM cache manager; is_cached is a
@@ -2972,12 +2971,18 @@ def test_cross_generator_eviction_keeps_shared_pins(docs, spark):
         lvl = df.storageLevel
         return lvl.useMemory or lvl.useDisk
 
-    live = [df for df, _h in _gen_cache("minhash")]
-    assert live and all(_really_cached(df) for df in live)
-    # the gate's NEXT generation evicts its stale one — the shared
-    # entry belongs to the live minhash pin and must survive
-    _evict_generation(_gen_cache("minhash_gate"))
-    assert all(_really_cached(df) for df in live)
-    # ... and once the live pin itself is evicted, the entry frees
-    _evict_generation(_gen_cache("minhash"))
+    with ps.scope() as outer:
+        dedup.minhash_lsh_candidates(sig, "doc_id", bands=2, rows_per_band=2)
+        live = [df for df, _free in outer._owned]
+        with ps.scope() as gate:
+            dedup.minhash_candidates_against(
+                small, bare_idx, "doc_id", "text", include_shard_pairs=False,
+                **kw,
+            ).count()
+            # the gate's band frame is canonically equal to a live pin
+            assert {df.semanticHash() for df, _f in gate._owned} & {
+                df.semanticHash() for df in live
+            }
+        assert live and all(_really_cached(df) for df in live)
+    # ... and once the live pin's own scope closes, the entry frees
     assert not any(_really_cached(df) for df in live)

@@ -283,3 +283,54 @@ def test_sparse_hessian_matches_dense_hessian(family):
     assert abs(g_s - g_d) < 1e-10 and abs(G_s - G_d) < 1e-10
     np.testing.assert_allclose(grad_s, grad_d, atol=1e-10)
     np.testing.assert_allclose(H_s, H_d, atol=1e-10)
+
+
+def test_sparse_fista_fallback_has_its_own_route_key(spark, monkeypatch):
+    """The sparse in-core FISTA fallback (taken when the sparse
+    prox-Newton's Hessian square plus pair expansion break the budget
+    but the sparse columns fit) counts under ``incore_sparse_fista``,
+    not under the prox-Newton's ``incore_sparse``: each key equals the
+    number of solves the matching solver ran. Half the bulk price
+    forces the per-column route and the fallback."""
+    import prague_spark.core.solver as solver_mod
+
+    calls = {"fista": 0, "prox_newton": 0}
+
+    def counting(name):
+        inner = getattr(solver_mod, name)
+
+        def run(*a, **kw):
+            calls[name] += 1
+            return inner(*a, **kw)
+
+        return run
+
+    for name in calls:
+        monkeypatch.setattr(solver_mod, name, counting(name))
+    rng = np.random.default_rng(3)
+    n, p = 200, 300
+    rows, cols, vals = [], [], []
+    for r in range(n):
+        for c in rng.choice(p, size=6, replace=False):
+            rows.append(r)
+            cols.append(int(c))
+            vals.append(float(rng.normal()))
+    X = np.zeros((n, p))
+    X[rows, cols] = vals
+    eta = 2.0 * X[:, :10] @ rng.normal(size=10)
+    y = (rng.random(n) < 1.0 / (1.0 + np.exp(-eta))).astype(float)
+    trip = spark.createDataFrame(
+        list(zip(rows, cols, vals)), "row_id long, col_id int, value double"
+    )
+    ydf = spark.createDataFrame(
+        [(i, float(y[i])) for i in range(n)], "row_id long, y double"
+    )
+    m = fit_sparse(
+        trip, ydf, "y", "binomial", n_cols=p, n_sigma=4,
+        lambda_min_ratio=0.4,
+        incore_limit=_bulk_incore_bytes(n, 1, len(rows)) // 2,
+    )
+    routes = m.diagnostics["subset_fit_routes"]
+    assert routes["incore_dense"] == routes["distributed"] == 0, routes
+    assert routes["incore_sparse_fista"] == calls["fista"] > 0, routes
+    assert routes["incore_sparse"] == calls["prox_newton"], routes

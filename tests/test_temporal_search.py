@@ -759,6 +759,27 @@ def test_funnel_hot_key_cap(spark, caplog):
     assert any("dropping 1 keys" in r.message for r in caplog.records)
 
 
+def test_funnel_pins_are_scoped(spark, persistent_rdds):
+    """The capped funnel's two pins (step events, hot-key list) belong
+    to the caller's scope: after a consumed call inside ps.scope(), the
+    JVM's persistent RDDs are back where they were."""
+    import prague_spark as ps
+    from prague_spark.ops.funnel import funnel
+
+    df = spark.createDataFrame(
+        [(u, _ts(8 + s, u), ["view", "click", "buy"][s])
+         for u in range(1, 20) for s in range(3)],
+        "u bigint, ts timestamp, et string",
+    )
+    before = persistent_rdds()
+    with ps.scope():
+        out = funnel(df, "u", "ts", "et", ["view", "click", "buy"],
+                     max_events_per_key=1000)
+        assert {r["depth"] for r in out.collect()} == {3}
+        assert len(persistent_rdds() - before) == 2
+    assert persistent_rdds() == before
+
+
 # ------------------------------------------------------------------ profile
 
 def test_profile_table_one_pass(spark):
